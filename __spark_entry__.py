@@ -4499,11 +4499,12 @@ def _a121_entity_resolution(spark, sf_dir):
     pipeline.  Scale shape: candidate volume is sum of block-size^2, so
     block keys must stay selective — the engineered worst case (ALL 15k
     sf0.1 customers in ONE block = 112M pairs) measured 341 s purely
-    pair-volume-bound (tools/probe_r6b.py).  r7: the hot-block cap is now
-    ENFORCED via dedup.blocked_candidate_pairs(max_block_size=2000) —
-    oversized blocks sub-block by id rank, bounding per-key candidates at
-    ~n*cap/2.  The cap never bites at test SFs (largest (nation, segment)
-    block is ~120 customers at sf0.1), so the full-quadratic SQL oracle
+    pair-volume-bound (tools/probe_r6b.py, in git history at 117ab71).
+    r7: the hot-block cap is now ENFORCED via
+    dedup.blocked_candidate_pairs(max_block_size=2000) — oversized blocks
+    sub-block by id rank, bounding per-key candidates at ~n*cap/2.  The
+    cap never bites at test SFs (largest (nation, segment) block is ~120
+    customers at sf0.1), so the full-quadratic SQL oracle
     stays exact; scoring is pure expressions, the top-k is
     TakeOrderedAndProject."""
     from pyspark.sql import Window
@@ -7219,7 +7220,8 @@ import json, os, sys, time
 # repo root arrives as argv[7] (derived from THIS checkout's __file__ by
 # the spawner) — a hardcoded /root/repo would silently import
 # persistor_spark from the wrong tree in a worktree/A-B checkout
-# (r13 ADVICE; tools/probe_r13_drift.py itself runs pinned worktrees)
+# (r13 ADVICE; tools/probe_r13_drift.py, in git history at 117ab71, ran
+# pinned worktrees)
 sys.path.insert(0, sys.argv[7])
 from pyspark.sql import functions as F
 

@@ -96,12 +96,12 @@ def bench_ingest_persist(ctx: Ctx):
     ctx.index_raw_path = ctx.fresh("index_raw")
     result = fixtures.run_fixture_ingest(ctx.spark, SF_DIR, persist_intermediate=True)
     ingest.write_blobs(result, ctx.blob_path, fmt="parquet")
-    ingest.write_index(result, ctx.index_raw_path, optimize_layout=False)
+    ingest.write_index(result, ctx.index_raw_path)
     result.unpersist()
 
 
 def bench_index_layout(ctx: Ctx):
-    """The optimize_layout cost in isolation: rewrite the raw index into
+    """The index-layout cost in isolation: rewrite the raw index into
     FEW large range-partitioned files sorted by unique_id (row-group min/max
     pruning, the Mongo _id-index analogue), then write the Iceberg-lite
     min/max file manifest.  The r3 10x probe showed point lookup going

@@ -133,21 +133,6 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(sh: Column, num_perm: int = 128) -> Column:
-    """num_perm-wide MinHash signature as a pure JVM expression: sig[p] = min
-    over shingles of xxhash64(shingle, p).
-
-    NOTE: correct but interpreted (HOF lambdas don't codegen) — cost is
-    num_perm × |shingles| string hashes per row.  The production path is
-    `minhash_signature_udf`, which hashes each shingle ONCE in the JVM and
-    applies the permutations as one vectorized numpy pass per Arrow batch
-    (the datasketch construction: (a·h + b) mod p)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda p: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, p))),
-    )
-
-
 _MERSENNE61 = (1 << 61) - 1
 
 
@@ -185,7 +170,9 @@ def minhash_signature_udf(num_perm: int = 128, seed: int = 1):
     """Arrow-vectorized MinHash over PRE-HASHED shingles (array<long> column
     of xxhash64 values): sig[p] = min_h (a_p·h + b_p mod M61).  One numpy
     matrix op per row; the Python cost is O(num_perm · |shingles|) SIMD ops,
-    ~100× cheaper than the interpreted-expression variant."""
+    ~100× cheaper than an interpreted per-permutation
+    `transform(xxhash64(shingle, p))` expression (HOF lambdas don't
+    codegen)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -313,10 +300,6 @@ def pack_bits(bits_col: Column) -> Column:
 
 def simhash(text: Column | str = "text", bits: int = 64) -> Column:
     return pack_bits(simhash_bits(text, bits))
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def hamming_bits(a: Column, b: Column) -> Column:

@@ -79,11 +79,6 @@ def load_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scalar.withColumn("attributes", attrs)
 
 
-def messages_cte(events_table: str = "events") -> str:
-    """DuckDB-oracle CTE body equivalent to load_messages' scalar projection."""
-    return MESSAGES_SQL.replace("FROM events", f"FROM {events_table}")
-
-
 def fixture_ingest_config():
     """IngestConfig matching the oracle CTEs: deterministic clock =
     ingestion_time, gs://persistor-bucket/msg/<y>/<m>/<d>/<version>/ layout."""

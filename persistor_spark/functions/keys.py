@@ -1,6 +1,11 @@
 """Key-derivation expressions (reference: sender.go:136-201, T5/T6 in SURVEY.md).
 
-All pure Column builders — JVM-side, codegen-friendly, no UDFs.
+All pure Column builders — JVM-side, codegen-friendly, no UDFs.  Each takes
+column NAMES and composes ONE SQL expression via F.expr instead of several
+Column-API calls: each Column call is a py4j round-trip, and these
+expressions are built once per ingest batch — on the streaming path that
+driver cost recurs every micro-batch (r14 opt, guide §1.2 per-task/driver
+work; same change as the ANN scoring expressions).
 """
 
 from __future__ import annotations
@@ -11,53 +16,32 @@ from persistor_spark.functions.sqlq import sql_ident, sql_str
 from persistor_spark.schemas import PROMOTED_ATTRIBUTE_KEYS
 
 
-def unique_id(broker_id: Column | str = "broker_id", broker_msg_id: Column | str = "broker_msg_id") -> Column:
-    """`unique_id = broker_id || '_' || broker_msg_id` (sender.go:173).
-
-    The string-name (default) arms of these builders compose ONE SQL
-    expression via F.expr instead of several Column-API calls: each
-    Column call is a py4j round-trip, and these expressions are built
-    once per ingest batch — on the streaming path that driver cost
-    recurs every micro-batch (r14 opt, guide §1.2 per-task/driver work;
-    same change as the ANN scoring expressions).  Semantics identical:
-    CASE WHEN with no ELSE is F.when with no otherwise (NULL)."""
-    if isinstance(broker_id, str) and isinstance(broker_msg_id, str):
-        return F.expr(
-            f"concat({sql_ident(broker_id)}, '_', {sql_ident(broker_msg_id)})"
-        )
-    b = F.col(broker_id) if isinstance(broker_id, str) else broker_id
-    m = F.col(broker_msg_id) if isinstance(broker_msg_id, str) else broker_msg_id
-    return F.concat(b, F.lit("_"), m)
+def unique_id(broker_id: str = "broker_id", broker_msg_id: str = "broker_msg_id") -> Column:
+    """`unique_id = broker_id || '_' || broker_msg_id` (sender.go:173)."""
+    return F.expr(f"concat({sql_ident(broker_id)}, '_', {sql_ident(broker_msg_id)})")
 
 
 def index_source_key(
-    source_key: Column | str = "business_source_key",
-    object_key: Column | str = "business_object_key",
+    source_key: str = "business_source_key",
+    object_key: str = "business_object_key",
 ) -> Column:
     """`bsk || '_' || bok` iff both present AND non-empty, else NULL
     (sender.go:158: `len(bsk) > 0 && len(bok) > 0` — an empty-string business
-    key leaves index_source_key unset, it does not produce '_' / 'src_')."""
-    if isinstance(source_key, str) and isinstance(object_key, str):
-        s, o = sql_ident(source_key), sql_ident(object_key)
-        return F.expr(
-            f"CASE WHEN {s} IS NOT NULL AND length({s}) > 0"
-            f" AND {o} IS NOT NULL AND length({o}) > 0"
-            f" THEN concat({s}, '_', {o}) END"
-        )
-    s = F.col(source_key) if isinstance(source_key, str) else source_key
-    o = F.col(object_key) if isinstance(object_key, str) else object_key
-    non_empty = s.isNotNull() & (F.length(s) > 0) & o.isNotNull() & (F.length(o) > 0)
-    return F.when(non_empty, F.concat(s, F.lit("_"), o))
+    key leaves index_source_key unset, it does not produce '_' / 'src_').
+    CASE WHEN with no ELSE yields NULL."""
+    s, o = sql_ident(source_key), sql_ident(object_key)
+    return F.expr(
+        f"CASE WHEN {s} IS NOT NULL AND length({s}) > 0"
+        f" AND {o} IS NOT NULL AND length({o}) > 0"
+        f" THEN concat({s}, '_', {o}) END"
+    )
 
 
-def additional_metadata(attributes: Column | str = "attributes") -> Column:
+def additional_metadata(attributes: str = "attributes") -> Column:
     """User attributes minus the promoted business keys (sender.go:155-156
     deletes them from the map after extraction)."""
-    if isinstance(attributes, str):
-        arr = ", ".join(sql_str(k) for k in PROMOTED_ATTRIBUTE_KEYS)
-        return F.expr(
-            f"map_filter({sql_ident(attributes)},"
-            f" (k, v) -> NOT array_contains(array({arr}), k))"
-        )
-    promoted = F.array(*[F.lit(k) for k in PROMOTED_ATTRIBUTE_KEYS])
-    return F.map_filter(attributes, lambda k, _v: ~F.array_contains(promoted, k))
+    arr = ", ".join(sql_str(k) for k in PROMOTED_ATTRIBUTE_KEYS)
+    return F.expr(
+        f"map_filter({sql_ident(attributes)},"
+        f" (k, v) -> NOT array_contains(array({arr}), k))"
+    )

@@ -20,25 +20,17 @@ join key either way (D9/D10 pin the semantics).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 from persistor_spark.config import StorageConfig, TIME_MASK_MEMBERS
 from persistor_spark.functions.sqlq import sql_ident, sql_str
 from persistor_spark.operators.version_batching import UNKNOWN
 
-_TIME_PART_EXPR = {
-    "year": lambda clock: F.year(clock).cast("string"),
-    "month": lambda clock: F.lpad(F.month(clock).cast("string"), 2, "0"),
-    "day": lambda clock: F.lpad(F.dayofmonth(clock).cast("string"), 2, "0"),
-    "hour": lambda clock: F.lpad(F.hour(clock).cast("string"), 2, "0"),
-}
-
-# SQL-string twins of _TIME_PART_EXPR for the str-clock fast path (r14 opt,
-# guide §1.2): the ingest plan builds these per batch — per MICRO-batch on
-# the streaming path — and every Column call above is a driver py4j round
-# trip; one F.expr parse replaces four calls per member.  current_timestamp()
-# as the clock string is evaluated once per query exactly like the shared
-# Column object was (query-start literal), so values are unchanged.
+# Mask time parts as SQL templates over the clock expression string: the
+# ingest plan builds these per batch — per MICRO-batch on the streaming path
+# — and one F.expr parse per member replaces a chain of Column calls, each a
+# driver py4j round trip (r14 opt, guide §1.2).  current_timestamp() as the
+# clock string is a query-start literal, so every member sees one instant.
 _TIME_PART_SQL = {
     "year": "cast(year({c}) as string)",
     "month": "lpad(cast(month({c}) as string), 2, '0')",
@@ -49,7 +41,7 @@ _TIME_PART_SQL = {
 
 def mask_columns(
     cfg: StorageConfig,
-    clock: Column | str,
+    clock: str,
     attributes: str = "attributes",
 ) -> dict[str, Column]:
     """One named Column per mask member, in mask order (storage.go:125-189).
@@ -59,19 +51,15 @@ def mask_columns(
     lowercased here, and a config like mask=('ENV',),
     custom_values={'ENV': ...} passes validate() with its original casing.
 
-    `clock` may be a Column (legacy/tests) or a SQL expression STRING
-    (the ingest plan's fast path — see _TIME_PART_SQL).
+    `clock` is a SQL expression string (a quoted column name or
+    `current_timestamp()`; see plans.ingest.clock_sql).
     """
     custom = {k.lower(): v for k, v in cfg.custom_values.items()}
     cols: dict[str, Column] = {}
     for member in cfg.mask:
         m = member.lower()
         if m in TIME_MASK_MEMBERS:
-            cols[f"__mask_{m}"] = (
-                F.expr(_TIME_PART_SQL[m].format(c=clock))
-                if isinstance(clock, str)
-                else _TIME_PART_EXPR[m](clock)
-            )
+            cols[f"__mask_{m}"] = F.expr(_TIME_PART_SQL[m].format(c=clock))
         elif m.startswith("{") and m.endswith("}"):
             attr = m[1:-1]
             cols[f"__mask_{attr}"] = F.expr(
@@ -81,20 +69,6 @@ def mask_columns(
         else:
             cols[f"__mask_{m}"] = F.lit(str(custom[m]))
     return cols
-
-
-def location_key(
-    cfg: StorageConfig,
-    mask_cols: dict[str, Column],
-    blob_name: Column,
-) -> Column:
-    """Full blob URL: `<scheme>://<bucket>/<prefix>/<mask parts>/blob-<name>.<ext>`
-    (storage.go:253-264 addressing; S4/S5 parse it back)."""
-    parts: list[Column] = [F.lit(f"{cfg.base_url}/{cfg.prefix}/")]
-    for col in mask_cols.values():
-        parts.extend([col, F.lit("/")])
-    parts.extend([F.lit("blob-"), blob_name, F.lit(f".{cfg.extension}")])
-    return F.concat(*parts)
 
 
 def split_location(col: Column) -> tuple[Column, Column]:
@@ -110,11 +84,13 @@ def split_location(col: Column) -> tuple[Column, Column]:
 
 def blob_column_exprs(
     cfg: StorageConfig,
-    clock: Column | str,
+    clock: str,
     blob_name: Column | None = None,
     attributes: str = "attributes",
 ) -> tuple[dict[str, Column], Column]:
-    """(mask column dict, location_key Column) — the location_key refers to
+    """(mask column dict, location_key Column).  location_key is the full
+    blob URL `<scheme>://<bucket>/<prefix>/<mask parts>/blob-<name>.<ext>`
+    (storage.go:253-264 addressing; S4/S5 parse it back) and refers to
     the mask columns BY NAME, so callers attach the dict first (its own
     withColumns) and location_key in a later op, letting them fuse either
     with other derived columns.  The static part of the location URL
@@ -135,17 +111,3 @@ def blob_column_exprs(
         F.lit(f".{cfg.extension}"),
     )
     return cols, lk
-
-
-def add_blob_columns(
-    df: DataFrame,
-    cfg: StorageConfig,
-    clock: Column | str,
-    blob_name: Column | None = None,
-    attributes: str = "attributes",
-) -> tuple[DataFrame, list[str]]:
-    """Attach mask columns + `location_key`; returns (df, mask column names)
-    for use as `partitionBy(...)` keys on the physical write."""
-    cols, lk = blob_column_exprs(cfg, clock, blob_name, attributes)
-    df = df.withColumns(cols).withColumn("location_key", lk)
-    return df, list(cols)

@@ -11,7 +11,7 @@ write; semantics are identical (D7 pins them).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 from persistor_spark.functions.sqlq import sql_ident, sql_str
 
@@ -26,19 +26,3 @@ def version_column(key: str, attributes: str = "attributes") -> Column:
     return F.expr(
         f"coalesce(element_at({sql_ident(attributes)}, {sql_str(key)}), '{UNKNOWN}')"
     )
-
-
-def with_version_columns(
-    df: DataFrame, version_keys: tuple[str, ...], attributes: str = "attributes"
-) -> DataFrame:
-    """Add one `__version_<key>` column per version key.  Downstream
-    partitionBy on these columns reproduces BatchByVersions' mini-batches."""
-    if not version_keys:
-        return df
-    return df.withColumns(
-        {f"__version_{k}": version_column(k, attributes) for k in version_keys}
-    )
-
-
-def version_column_names(version_keys: tuple[str, ...]) -> list[str]:
-    return [f"__version_{k}" for k in version_keys]

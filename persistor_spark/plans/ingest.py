@@ -10,14 +10,16 @@ the same micro-batch, so we never pay a second serialize/publish/consume.
 Scale shape:
 - version split (T3) = derived columns + `partitionBy` on write — distributed,
   no driver grouping;
-- position assignment = one window shuffle keyed by `location_key` (bounded
-  partitions, see operators.positions);
+- position assignment = one window shuffle keyed by `location_key`: its
+  cardinality grows with data volume while per-blob row counts stay bounded
+  by the batch size (<=5000, persistor.toml:79), so partitions stay small;
 - everything else is narrow projections inside whole-stage codegen;
 - dead-letter routing (K6) is a filter split, not a second pass.
 """
 
 from __future__ import annotations
 
+import contextlib
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
@@ -26,10 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from persistor_spark.config import IngestConfig
 from persistor_spark.functions import keys
 from persistor_spark.operators import blob_naming
-from persistor_spark.operators.version_batching import (
-    version_column,
-    version_column_names,
-)
+from persistor_spark.operators.version_batching import version_column
 
 # Dead-letter reason attributes (sender.go:46-76; category strings from
 # persistor.go:43-46 and indexer.go:41-44).
@@ -62,17 +61,12 @@ class IngestResult:
             self._intermediate.unpersist()
 
 
-def clock_expr(cfg: IngestConfig) -> Column:
-    """Deterministic clock column if configured, else wall clock
-    (storage.go:104 uses time.Now(); tests inject — SURVEY.md §7.3 #4)."""
-    return F.col(cfg.clock_column) if cfg.clock_column else F.current_timestamp()
-
-
 def clock_sql(cfg: IngestConfig) -> str:
-    """The same clock as a SQL expression string, for the expr-string plan
-    builders (r14 opt, guide §1.2).  current_timestamp() is a query-start
-    literal, so repeating the string across mask expressions yields the
-    identical value the shared Column object did."""
+    """The ingest clock as a SQL expression string: the deterministic clock
+    column if configured, else the wall clock (storage.go:104 uses
+    time.Now(); tests inject — SURVEY.md §7.3 #4).  current_timestamp() is
+    a query-start literal, so repeating the string across the mask and
+    index expressions yields one value per query (r14 opt, guide §1.2)."""
     from persistor_spark.functions.sqlq import sql_ident
 
     return sql_ident(cfg.clock_column) if cfg.clock_column else "current_timestamp()"
@@ -127,8 +121,7 @@ def run_batch(
     if not cfg.dead_letter_enabled:
         deadletter = deadletter.limit(0)
 
-    ver_cols = version_column_names(cfg.version_keys)
-    clock = clock_expr(cfg)
+    clock = clock_sql(cfg)
     # Mask = configured members + version members appended (the reference
     # interleaves them via `{attr}` mask entries; config may also put the
     # version attr directly in the mask — avoid double-adding).
@@ -145,9 +138,7 @@ def run_batch(
     # reference those) — each DataFrame op is one eager analysis of the
     # growing plan, so op count is the driver-side cost that recurs per
     # micro-batch (r14 opt, guide §1.2).
-    mask_cols, lk = blob_naming.blob_column_exprs(
-        storage_cfg, clock_sql(cfg), blob_name=blob_name
-    )
+    mask_cols, lk = blob_naming.blob_column_exprs(storage_cfg, clock, blob_name=blob_name)
     live = live.withColumns(
         {
             **{f"__version_{k}": version_column(k) for k in cfg.version_keys},
@@ -158,16 +149,19 @@ def run_batch(
     live = live.withColumns(
         {"location_key": lk, "unique_id": keys.unique_id()}
     )
-    # Fused position pass (r14 opt, guide §2.1): the index's
-    # `location_position` and the blob records' `position` are the SAME
-    # row_number over (location_key, unique_id) — record_id IS unique_id —
-    # so compute the window ONCE here, before the sink fork, instead of
-    # once per sink.  With persist_intermediate the cached prefix now
-    # holds the window output, so the second sink's action skips the
-    # shuffle+sort entirely (previously each sink ran its own Window
-    # pass over the batch).  Values are unchanged: with_positions /
-    # with_blob_positions produced identical row numbers from identical
-    # (partition, order) specs.
+    # In-blob positions (sender.go:129,186-192; consumed 0-based at
+    # resubmitter util.go:47).  The reference's position is physical write
+    # order, unreproducible under Spark's retried/parallel writes, so it is
+    # made EXPLICIT (SURVEY.md §7.3 hard point 2): a dense row_number per
+    # location_key ordered by the deterministic unique_id, materialized in
+    # both the blob records and the index; D9's position-align join checks
+    # the round trip.  The index's `location_position` and the blob
+    # records' `position` are the SAME row_number — record_id IS unique_id
+    # — so the window runs ONCE, before the sink fork (r14 opt, guide
+    # §2.1).  The blob-size count shares the (partition, order) spec with
+    # an unbounded frame, so Spark evaluates both in ONE Window node over
+    # ONE sort.  With persist_intermediate the cached prefix holds the
+    # window output and the second sink skips the shuffle+sort.
     from pyspark.sql import Window as _W
 
     _w = _W.partitionBy("location_key").orderBy("unique_id")
@@ -185,8 +179,9 @@ def run_batch(
         live = live.persist()
 
     # Index projection (T5/T6 enrichment + T10 finalize).
-    idx_clock = clock + F.expr(f"INTERVAL {cfg.indexer_clock_skew_s} SECOND")
-    # NULL-for-singletons is an index-side convention (positions.py)
+    idx_clock = F.expr(f"{clock} + INTERVAL {cfg.indexer_clock_skew_s} SECOND")
+    # single-record blobs carry a NULL index position and skip
+    # deserialization (resubmitter.go:176-182) — an index-side convention
     index_metadata = live.withColumn(
         "location_position", F.when(F.col("__blob_n") > 1, F.col("__pos"))
     ).select(
@@ -226,6 +221,35 @@ def run_batch(
     )
 
 
+def _writer_lock(lock_path: str | None):
+    """The cross-process flock of the merge writers' `lock_path`, or a no-op."""
+    if lock_path is None:
+        return contextlib.nullcontext()
+    from persistor_spark.sources._statelock import state_lock
+
+    return state_lock(lock_path)
+
+
+def _merge_append(new: DataFrame, read_existing, on: list, append) -> int:
+    """Anti-join `new` on the `on` keys against the persisted table
+    (`read_existing()`), `append` only the missing rows, return their count.
+
+    ONLY "table doesn't exist yet" may skip the dedup anti-join; any other
+    analysis failure (corrupt footer, schema, permissions) must surface, or
+    a transient error silently appends duplicates."""
+    try:
+        new = new.join(read_existing().select(*on), on, "left_anti")
+    except AnalysisException as exc:
+        if not _is_path_missing(exc):
+            raise
+    new = new.persist()
+    n = new.count()
+    if n:
+        append(new)
+    new.unpersist()
+    return n
+
+
 def write_index_merge(result: IngestResult, path: str, lock_path: str | None = None) -> int:
     """Exactly-once index append WITHOUT Delta: anti-join the incoming batch
     against the unique_ids already present, append only the new rows.
@@ -237,8 +261,8 @@ def write_index_merge(result: IngestResult, path: str, lock_path: str | None = N
     function is `MERGE INTO ... WHEN NOT MATCHED THEN INSERT`; the anti-join
     formulation keeps the same semantics on plain parquet.  Scale note: the
     existing-side scan projects ONLY unique_id (column-pruned) and the join
-    is key-hash distributed; with the sorted layout option row-group stats
-    prune untouched files.
+    is key-hash distributed; on the range-sorted index layout (see
+    plans.layout) row-group stats prune untouched files.
 
     `lock_path`: serialize the whole read-dedup-append sequence under a
     cross-process advisory flock (sources/_statelock).  A SINGLE writer —
@@ -251,28 +275,14 @@ def write_index_merge(result: IngestResult, path: str, lock_path: str | None = N
     Iceberg this is the transaction log's job; the flock is the plain-
     parquet analogue, local-FS scope like the broker stand-ins.
     """
-    if lock_path is not None:
-        from persistor_spark.sources._statelock import state_lock
-
-        with state_lock(lock_path):
-            return write_index_merge(result, path, None)
     spark = result.index_metadata.sparkSession
-    new = result.index_metadata
-    try:
-        existing_ids = spark.read.parquet(path).select("unique_id")
-        new = new.join(existing_ids, "unique_id", "left_anti")
-    except AnalysisException as exc:
-        # ONLY "table doesn't exist yet" may skip the dedup anti-join; any
-        # other analysis failure (corrupt footer, schema, permissions) must
-        # surface, or a transient error silently appends duplicates.
-        if not _is_path_missing(exc):
-            raise
-    new = new.persist()
-    n = new.count()
-    if n:
-        new.write.mode("append").parquet(path)
-    new.unpersist()
-    return n
+    with _writer_lock(lock_path):
+        return _merge_append(
+            result.index_metadata,
+            lambda: spark.read.parquet(path),
+            ["unique_id"],
+            lambda new: new.write.mode("append").parquet(path),
+        )
 
 
 _AVRO_CHECKED: dict = {}
@@ -299,6 +309,29 @@ def resolve_blob_format(spark, fmt: str) -> str:
     return fmt
 
 
+def _append_blobs(records: DataFrame, mask_names: list, path: str, fmt: str) -> None:
+    """The one mask-partitioned blob append behind both blob writers.
+
+    Repartition on the mask columns first: upstream, rows arrive
+    partitioned by location_key (the position window, AQE-coalesced) or
+    hash-distributed on the merge anti-join's key, so every write task
+    would otherwise open a file in EVERY mask directory — task-count x
+    dir-count small files and serial encode per task.  With mask
+    partitioning each directory is written by one task.  The explicit
+    partition count keeps AQE from coalescing the write down to a handful
+    of tasks (parquet encode is CPU-bound; fewer tasks just serialize it)
+    — hash partitioning still maps each directory to exactly one task, so
+    the files-per-directory guarantee holds."""
+    n_write = records.sparkSession.sparkContext.defaultParallelism
+    (
+        records.repartition(n_write, *mask_names)
+        .write.mode("append")
+        .partitionBy(*mask_names)
+        .format(fmt)
+        .save(path)
+    )
+
+
 def write_blobs(result: IngestResult, path: str, fmt: str = "avro") -> None:
     """Physically persist blob records, directory-partitioned by the mask
     columns so every mask member partition-prunes at read time (T4 parity:
@@ -315,24 +348,7 @@ def write_blobs(result: IngestResult, path: str, fmt: str = "avro") -> None:
         ocf_io.write_blobs_ocf(result, path)
         return
     fmt = resolve_blob_format(result.blob_records.sparkSession, fmt)
-    # repartition on the mask columns first: the upstream position window
-    # leaves rows partitioned by location_key (and AQE-coalesced), so every
-    # write task would otherwise open a file in EVERY mask directory —
-    # task-count x dir-count small files and serial encode per task.  With
-    # mask partitioning each directory is written by one task.  The
-    # explicit partition count keeps AQE from coalescing the write down to
-    # a handful of tasks (parquet encode is CPU-bound; fewer tasks just
-    # serialize it) — hash partitioning still maps each directory to
-    # exactly one task, so the files-per-directory guarantee holds.
-    spark = result.blob_records.sparkSession
-    n_write = spark.sparkContext.defaultParallelism
-    (
-        result.blob_records.repartition(n_write, *result.mask_column_names)
-        .write.mode("append")
-        .partitionBy(*result.mask_column_names)
-        .format(fmt)
-        .save(path)
-    )
+    _append_blobs(result.blob_records, result.mask_column_names, path, fmt)
 
 
 def write_blobs_merge(
@@ -353,37 +369,15 @@ def write_blobs_merge(
     `lock_path`: serialize concurrent WRITERS, exactly as in
     write_index_merge (see its docstring for when it is required).
     """
-    if lock_path is not None:
-        from persistor_spark.sources._statelock import state_lock
-
-        with state_lock(lock_path):
-            return write_blobs_merge(result, path, fmt, None)
     spark = result.blob_records.sparkSession
     fmt = resolve_blob_format(spark, fmt)
-    new = result.blob_records
-    try:
-        existing = spark.read.format(fmt).load(path).select("location_key", "record_id")
-        new = new.join(existing, ["location_key", "record_id"], "left_anti")
-    except AnalysisException as exc:
-        if not _is_path_missing(exc):
-            raise
-    new = new.persist()
-    n = new.count()
-    if n:
-        # same mask repartition as write_blobs (see its comment): the
-        # anti-join leaves rows hash-distributed on the join key, so every
-        # write task would otherwise open a file in EVERY mask directory —
-        # the small-files explosion, on the DEFAULT streaming blob path
-        spark_ctx = new.sparkSession.sparkContext
-        (
-            new.repartition(spark_ctx.defaultParallelism, *result.mask_column_names)
-            .write.mode("append")
-            .partitionBy(*result.mask_column_names)
-            .format(fmt)
-            .save(path)
+    with _writer_lock(lock_path):
+        return _merge_append(
+            result.blob_records,
+            lambda: spark.read.format(fmt).load(path),
+            ["location_key", "record_id"],
+            lambda new: _append_blobs(new, result.mask_column_names, path, fmt),
         )
-    new.unpersist()
-    return n
 
 
 def write_index_bucketed(
@@ -410,17 +404,8 @@ def write_index_bucketed(
     )
 
 
-def write_index(
-    result: IngestResult, path: str, fmt: str = "parquet", optimize_layout: bool = False
-) -> None:
-    """Persist index metadata (K4 analogue).  Parquet append locally; on a
-    Delta-enabled cluster this becomes MERGE on unique_id for exactly-once
-    (E1 resolution, SURVEY.md §7.3 #1).
-
-    `optimize_layout` range-partitions + sorts by unique_id so parquet
-    row-group min/max statistics prune point/IN-list lookups (the poor man's
-    Z-order; the reference gets the same effect from Mongo's _id index)."""
-    df = result.index_metadata
-    if optimize_layout:
-        df = df.repartitionByRange("unique_id").sortWithinPartitions("unique_id")
-    df.write.mode("append").format(fmt).save(path)
+def write_index(result: IngestResult, path: str) -> None:
+    """Persist index metadata (K4 analogue): a plain parquet append.  The
+    exactly-once form is write_index_merge; the range-sorted point-lookup
+    layout is plans.layout / plans.maintenance's job."""
+    result.index_metadata.write.mode("append").parquet(path)

@@ -4,8 +4,8 @@ The reference's layout tuning is Mongo's _id index; a Spark deployment has
 richer levers (SURVEY §4.2):
 
 - partitioned writes (plans.ingest.write_blobs) -> partition pruning;
-- sorted-by-unique_id parquet (write_index optimize_layout) -> row-group
-  min/max pruning for point lookups;
+- sorted-by-unique_id parquet (bench index_layout; plans.maintenance keeps
+  the per-file sort) -> row-group min/max pruning for point lookups;
 - BUCKETED tables (this module) -> shuffle-free joins for the hot join keys
   (index ⨝ blob on location_key; replay id-sets ⨝ index on unique_id).
 

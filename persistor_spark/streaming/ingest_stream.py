@@ -20,10 +20,11 @@ Semantics mapping (reference -> Spark):
   micro-batch finish.
 
 Scale: foreachBatch writes are partitioned by the mask columns (partition
-pruning for readers); the only shuffle per micro-batch is the bounded
-location_key window (operators.positions).  Checkpointing bounds replay; a
-Delta MERGE on unique_id upgrades the index to exactly-once on clusters that
-carry Delta.
+pruning for readers); the shuffles per micro-batch are the bounded
+location_key position window (plans.ingest.run_batch), the blob write's mask
+repartition and the merge writers' anti-joins.  Checkpointing bounds replay;
+a Delta MERGE on unique_id upgrades the index to exactly-once on clusters
+that carry Delta.
 """
 
 from __future__ import annotations
@@ -317,11 +318,14 @@ def run_stream(
         else:
             # Deterministic clock column: replays derive the SAME
             # location_keys, so ordering between the sinks carries no
-            # guarantee and they overlap from two driver threads: both
-            # consume the SAME persisted intermediate (BlockManager computes
-            # each cached partition once; the second job blocks on the block
-            # lock, never recomputes) — the batch's wall-clock is
-            # max(blobs, index) instead of the sum.
+            # guarantee and they overlap from two driver threads — the
+            # batch's wall-clock is max(blobs, index) instead of the sum.
+            # With no failure hook the intermediate is NOT persisted (see
+            # `deterministic` above): each sink recomputes the derivation,
+            # position window included, and the two jobs run concurrently.
+            # With a failure hook both consume the persisted intermediate
+            # (BlockManager computes each cached partition once; the second
+            # job blocks on the block lock, never recomputes).
             import concurrent.futures as _cf
 
             with _cf.ThreadPoolExecutor(max_workers=2) as pool:

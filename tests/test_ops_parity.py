@@ -131,7 +131,7 @@ def test_mask_custom_values_case_insensitive(spark):
 
     cfg = StorageConfig(mask=("Year", "ENV"), custom_values={"ENV": "prod"})
     cfg.validate()
-    cols = mask_columns(cfg, F.col("ingestion_time"))
+    cols = mask_columns(cfg, "ingestion_time")
     assert set(cols) == {"__mask_year", "__mask_env"}
     row = (
         spark.createDataFrame([("2024-03-04 05:06:07",)], "ingestion_time string")

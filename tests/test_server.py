@@ -275,6 +275,7 @@ def test_tls_roundtrip(tmp_path):
 
 
 def test_read_header_timeout_drops_stalled_client():
+    import re
     import socket
     import time as _time
 
@@ -382,6 +383,7 @@ def test_slow_body_not_dropped_by_header_timeout():
     """A client that sends headers promptly but trickles the POST body
     past the read-header timeout must still get its request served — Go's
     ReadHeaderTimeout only bounds header reading (ADVICE r5)."""
+    import re
     import socket
     import time as _time
 
@@ -397,7 +399,19 @@ def test_slow_body_not_dropped_by_header_timeout():
         )
         _time.sleep(1.2)  # stall mid-body, past the 0.5 s header timeout
         conn.sendall(body)
-        resp = conn.recv(65536)
+        # _reply writes the header block and the body in separate sends, so
+        # one recv may return only the headers: read until Content-Length
+        # body bytes have arrived
+        resp = b""
+        while True:
+            chunk = conn.recv(65536)
+            if not chunk:
+                break
+            resp += chunk
+            head, sep, rest = resp.partition(b"\r\n\r\n")
+            length = re.search(rb"Content-Length: (\d+)", head)
+            if sep and length and len(rest) >= int(length.group(1)):
+                break
         # reaches the handler (unknown collection -> 400 envelope), not a
         # silent connection drop
         assert b"400" in resp and srv.ON_BAD_REQUEST.encode() in resp
