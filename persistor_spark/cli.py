@@ -20,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from datetime import datetime, timezone
 
 from persistor_spark.config import IngestConfig
 from persistor_spark.functions.timestamps import parse_query_wire
@@ -28,6 +29,11 @@ from persistor_spark.session import build_session
 
 def _emit(obj) -> None:
     print(json.dumps(obj, default=str))
+
+
+def _ingest_instant() -> datetime:
+    """The one instant a batch `ingest` run is clocked at."""
+    return datetime.now(timezone.utc)
 
 
 def cmd_ingest(args) -> int:
@@ -64,7 +70,12 @@ def cmd_ingest(args) -> int:
                 "— is --source a messages-schema parquet directory?"
             })
             return 2
-        result = ingest.run_batch(messages, cfg)
+        # the blob and index writes are separate actions, and each would
+        # read its own current_timestamp(): pin one instant, or a run that
+        # crosses midnight files index rows under another day than their
+        # blobs
+        messages, batch_cfg = ingest.pin_clock(messages, cfg, F.lit(_ingest_instant()))
+        result = ingest.run_batch(messages, batch_cfg)
         ingest.write_blobs(result, sinks.blob_path, fmt=args.blob_format)
         ingest.write_index(result, sinks.index_path)
         result.deadletter.write.mode("append").parquet(sinks.deadletter_path)

@@ -76,8 +76,10 @@ class IngestConfig:
     version_keys: tuple[str, ...] = ("attr_version",)
     # Column name used as the deterministic clock for time-mask members and
     # indexer_ingestion_time.  None -> wall clock (production default;
-    # storage.go:104 uses time.Now()).  Tests/fixtures inject a column
-    # (SURVEY.md §7.3 hard point 4).
+    # storage.go:104 uses time.Now()), pinned to one instant per unit of
+    # work (plans.ingest.pin_clock): the micro-batch's logged timestamp in
+    # streaming, which replays reuse; one driver-side instant in the batch
+    # CLI.  Tests/fixtures inject a column (SURVEY.md §7.3 hard point 4).
     clock_column: str | None = None
     indexer_clock_skew_s: int = 60
     dead_letter_enabled: bool = True

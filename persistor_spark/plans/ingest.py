@@ -20,15 +20,17 @@ Scale shape:
 from __future__ import annotations
 
 import contextlib
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from persistor_spark.config import IngestConfig
 from persistor_spark.functions import keys
 from persistor_spark.operators import blob_naming
 from persistor_spark.operators.version_batching import version_column
+from persistor_spark.plans import fsutil
 
 # Dead-letter reason attributes (sender.go:46-76; category strings from
 # persistor.go:43-46 and indexer.go:41-44).
@@ -39,11 +41,34 @@ DL_SOURCE_CORE = "Dataphos Persistor - Core"
 DL_SOURCE_INDEXER = "Dataphos Persistor - Indexer"
 
 
-def _is_path_missing(exc: AnalysisException) -> bool:
-    """True iff the AnalysisException means 'no table at this path yet'."""
+# The column `pin_clock` attaches.  Single underscore: the streaming
+# handler drops `__`-prefixed parse bookkeeping, and this must survive it.
+PINNED_CLOCK_COLUMN = "_pinned_clock"
+
+
+def _no_table_yet(exc: AnalysisException) -> bool:
+    """True iff the AnalysisException means 'no rows at this path yet': no
+    directory, or a directory holding no data files (an empty partitioned
+    append leaves only `_SUCCESS`, and schema inference then fails)."""
     cond = getattr(exc, "getCondition", lambda: None)() or ""
     msg = str(exc)
-    return "PATH_NOT_FOUND" in cond or "Path does not exist" in msg
+    return (
+        "PATH_NOT_FOUND" in cond
+        or "UNABLE_TO_INFER_SCHEMA" in cond
+        or "Path does not exist" in msg
+    )
+
+
+def observed_count(obs, key: str = "n") -> int:
+    """The count metric `key` of an Observation whose action has run, or 0
+    when there is none: a plan optimized to an empty relation (statically,
+    or by AQE after an anti-join came back empty) prunes its CollectMetrics
+    node, and `Observation.get` then fails an assertion instead of
+    returning a row.  No metrics row means zero rows flowed."""
+    try:
+        return obs.get[key]
+    except Py4JJavaError:  # the JVM-side assertion on the missing row
+        return 0
 
 
 @dataclass
@@ -70,6 +95,27 @@ def clock_sql(cfg: IngestConfig) -> str:
     from persistor_spark.functions.sqlq import sql_ident
 
     return sql_ident(cfg.clock_column) if cfg.clock_column else "current_timestamp()"
+
+
+def pin_clock(
+    messages: DataFrame, cfg: IngestConfig, instant: Column
+) -> tuple[DataFrame, IngestConfig]:
+    """Pin the wall clock of a `clock_column=None` config to ONE instant:
+    attach `instant` as PINNED_CLOCK_COLUMN and return (messages, cfg
+    naming it), so every action over the derivation — both sinks, a
+    recompute, a replay — reads the same value instead of re-evaluating
+    current_timestamp().  A configured clock column is returned as is.
+
+    Streaming passes F.current_timestamp() on the streaming frame, which
+    Spark resolves to the micro-batch's logged `batchTimestampMs` (reused
+    when the batch is replayed); the batch CLI passes one driver-side
+    literal."""
+    if cfg.clock_column is not None:
+        return messages, cfg
+    return (
+        messages.withColumn(PINNED_CLOCK_COLUMN, instant),
+        replace(cfg, clock_column=PINNED_CLOCK_COLUMN),
+    )
 
 
 def run_batch(
@@ -153,18 +199,25 @@ def run_batch(
     # resubmitter util.go:47).  The reference's position is physical write
     # order, unreproducible under Spark's retried/parallel writes, so it is
     # made EXPLICIT (SURVEY.md §7.3 hard point 2): a dense row_number per
-    # location_key ordered by the deterministic unique_id, materialized in
-    # both the blob records and the index; D9's position-align join checks
-    # the round trip.  The index's `location_position` and the blob
-    # records' `position` are the SAME row_number — record_id IS unique_id
-    # — so the window runs ONCE, before the sink fork (r14 opt, guide
-    # §2.1).  The blob-size count shares the (partition, order) spec with
-    # an unbounded frame, so Spark evaluates both in ONE Window node over
-    # ONE sort.  With persist_intermediate the cached prefix holds the
-    # window output and the second sink skips the shuffle+sort.
+    # location_key ordered by unique_id, materialized in both the blob
+    # records and the index; D9's position-align join checks the round
+    # trip.  unique_id is not a key (a redelivered id may carry another
+    # payload), so payload hash then payload break ties: without a total
+    # order, two uncached evaluations of the window (one per sink) could
+    # number tied rows differently and the index would point at the wrong
+    # payload.  With unique ids the extra keys change no value.  The
+    # index's `location_position` and the blob records' `position` are the
+    # SAME row_number — record_id IS unique_id — so one window, before the
+    # sink fork, serves both (r14 opt, guide §2.1).  The blob-size count
+    # shares the (partition, order) spec with an unbounded frame, so Spark
+    # evaluates both in ONE Window node over ONE sort.  With
+    # persist_intermediate the cached prefix holds the window output and
+    # the second sink skips the shuffle+sort.
     from pyspark.sql import Window as _W
 
-    _w = _W.partitionBy("location_key").orderBy("unique_id")
+    _w = _W.partitionBy("location_key").orderBy(
+        "unique_id", F.xxhash64("payload"), "payload"
+    )
     live = live.withColumns(
         {
             "__pos": F.row_number().over(_w).cast("int"),
@@ -230,24 +283,32 @@ def _writer_lock(lock_path: str | None):
     return state_lock(lock_path)
 
 
-def _merge_append(new: DataFrame, read_existing, on: list, append) -> int:
-    """Anti-join `new` on the `on` keys against the persisted table
+def _merge_append(new: DataFrame, path: str, read_existing, on: list, append) -> int:
+    """Anti-join `new` on the `on` keys against the table at `path`
     (`read_existing()`), `append` only the missing rows, return their count.
 
-    ONLY "table doesn't exist yet" may skip the dedup anti-join; any other
-    analysis failure (corrupt footer, schema, permissions) must surface, or
-    a transient error silently appends duplicates."""
-    try:
-        new = new.join(read_existing().select(*on), on, "left_anti")
-    except AnalysisException as exc:
-        if not _is_path_missing(exc):
-            raise
-    new = new.persist()
-    n = new.count()
-    if n:
-        append(new)
-    new.unpersist()
-    return n
+    One write job: the count is an observation riding the append, so the
+    append always runs — a fully replayed batch appends zero rows, which
+    on an unpartitioned table (the index) leaves one schema-only parquet
+    file.
+
+    A missing table is detected with a filesystem check rather than by
+    letting the read fail: once an Observation has run in the session, a
+    failed read of a missing path makes Spark's execution listener log a
+    long PATH_NOT_FOUND stack trace.  The exception check stays as the
+    fallback (a table deleted between the two calls, a directory with no
+    data files); ONLY "no rows there yet" may skip the dedup anti-join —
+    any other analysis failure (corrupt footer, schema, permissions) must
+    surface, or a transient error silently appends duplicates."""
+    if fsutil.exists(new.sparkSession, path):
+        try:
+            new = new.join(read_existing().select(*on), on, "left_anti")
+        except AnalysisException as exc:
+            if not _no_table_yet(exc):
+                raise
+    obs = Observation()
+    append(new.observe(obs, F.count(F.lit(1)).alias("n")))
+    return observed_count(obs)
 
 
 def write_index_merge(result: IngestResult, path: str, lock_path: str | None = None) -> int:
@@ -279,6 +340,7 @@ def write_index_merge(result: IngestResult, path: str, lock_path: str | None = N
     with _writer_lock(lock_path):
         return _merge_append(
             result.index_metadata,
+            path,
             lambda: spark.read.parquet(path),
             ["unique_id"],
             lambda new: new.write.mode("append").parquet(path),
@@ -374,6 +436,7 @@ def write_blobs_merge(
     with _writer_lock(lock_path):
         return _merge_append(
             result.blob_records,
+            path,
             lambda: spark.read.format(fmt).load(path),
             ["location_key", "record_id"],
             lambda new: _append_blobs(new, result.mask_column_names, path, fmt),

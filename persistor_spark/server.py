@@ -251,6 +251,7 @@ class FileResubmitter:
         from pyspark.sql import functions as F
 
         from persistor_spark.plans import resubmit as rs
+        from persistor_spark.plans.ingest import observed_count
         from persistor_spark.sources import blobs as blob_src
 
         blobs = blob_src.read_blob_records(self.spark, self.blobs_path)
@@ -268,16 +269,6 @@ class FileResubmitter:
         )
         ordered.write.mode("append").parquet(f"{self.out_root}/{topic}")
 
-        def _metric(obs, key: str) -> int:
-            # an all-unknown id set optimizes the plan to an empty
-            # LocalRelation and the CollectMetrics node is pruned with it —
-            # Observation.get then fails an assertion; no metrics row
-            # means zero rows flowed
-            try:
-                return obs.get[key]
-            except Exception:  # noqa: BLE001
-                return 0
-
         counts = rs.LineageCounts(
             # starting = what the caller ASKED for (len(ids) — reference
             # resubmitter_job.go:142), not what the index found: with
@@ -287,11 +278,11 @@ class FileResubmitter:
             # the found count is the starting set by definition.
             starting=requested
             if requested is not None
-            else _metric(obs_meta, "starting"),
-            indexed=_metric(obs_meta, "starting"),
-            fetched=_metric(obs_rec, "published"),
-            deserialized=_metric(obs_rec, "published"),
-            published=_metric(obs_rec, "published"),
+            else observed_count(obs_meta, "starting"),
+            indexed=observed_count(obs_meta, "starting"),
+            fetched=observed_count(obs_rec, "published"),
+            deserialized=observed_count(obs_rec, "published"),
+            published=observed_count(obs_rec, "published"),
         )
         return {
             "status": counts.http_status(),

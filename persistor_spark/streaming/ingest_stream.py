@@ -190,24 +190,31 @@ def run_stream(
     stable across checkpoint replays, which first-message-id naming under
     redelivery is not.
 
+    Ingest clock: with `cfg.clock_column=None` (the production default)
+    the clock is the micro-batch's own timestamp.  A current_timestamp()
+    column attached to the streaming frame (ingest.pin_clock) resolves to
+    the `batchTimestampMs` Spark logs in `offsets/<batch_id>` and reuses
+    when the batch is replayed, so every action over a batch — each sink,
+    each recompute, each replay — derives the same mask directories,
+    location_keys and indexer_ingestion_time.  A configured clock column
+    is used as is.
+
     Exactly-once (E1): both sinks default to the anti-join MERGE writers
     (write_blobs_merge on (location_key, record_id), write_index_merge on
-    unique_id).  With a deterministic `cfg.clock_column`, a batch that
-    fails between the two writes — or a source redelivery — re-runs with
-    the SAME batch_id, derives the SAME location_keys, finds its rows
-    present, and appends nothing.  With the WALL-CLOCK default a replay
-    that crosses a mask boundary (midnight) derives NEW location_keys; the
-    sinks then run blobs-strictly-before-index so every crash state stays
-    consistent (the index never references a key whose blobs are absent —
-    the worst case is orphaned first-attempt blobs, and the index merge on
-    unique_id still dedups the rows themselves).  Set the flags False only
-    for fire-and-forget bulk loads where the source is exactly-once end to
-    end.
+    unique_id).  A batch that fails between or during the two writes — or
+    a source redelivery — re-runs with the SAME batch_id and clock,
+    derives the SAME location_keys, finds its rows present, and appends
+    nothing.  The one batch a re-run can re-plan under a new clock is
+    batch 0 (after heal_virgin_checkpoint wipes a commit-less checkpoint);
+    its sinks run blobs first, see the sink-order rule in handle_batch.
+    Set the flags False only for fire-and-forget bulk loads where the
+    source is exactly-once end to end.
 
     `failure` mirrors run_batch's injection hook (rows -> DLQ);
     `fault_injector(batch_id)` is called between the blob and index writes
-    and may raise — the test hook for the mid-batch crash window, mirroring
-    the reference's writer-failure injection (handler_test.go:519-645).
+    (which then run one after the other) and may raise — the test hook for
+    the mid-batch crash window, mirroring the reference's writer-failure
+    injection (handler_test.go:519-645).
 
     Batch errors always PROPAGATE (failing the query) — a failed batch must
     not commit its source offsets, or it would be silently lost.  Retry
@@ -223,6 +230,7 @@ def run_stream(
         # disorder (a backfill replaying days of history needs a wide one,
         # or older-than-watermark batches are dropped as late)
         messages = _windows.dedup_gate_rows(messages, watermark=dedup_gate_watermark)
+    messages, batch_cfg = ingest.pin_clock(messages, cfg, F.current_timestamp())
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         # With no failure hook and no parse split, the dead-letter frame is
@@ -246,26 +254,20 @@ def run_stream(
         if "__invalid" in batch_df.columns:
             invalid = batch_df.filter(F.col("__invalid")).select(*cols)
             batch_df = batch_df.filter(~F.col("__invalid")).select(*cols)
-        # Cache the shared derivation prefix ONLY when it is a correctness
-        # device (r15 opt, guide §5 "caching is only worth it when..."):
-        # with a WALL-CLOCK mask the two sinks must read the ONE evaluated
-        # current_timestamp() (a midnight-crossing batch would otherwise
-        # write blobs and index under different masks), and an injected
-        # `failure` Column may be non-deterministic, so the good/bad split
-        # must be evaluated once.  Under a configured clock column with no
-        # failure hook the derivation is value-deterministic: the sinks
-        # recompute identical rows independently and OVERLAP fully instead
-        # of serializing on the cache fill's block locks — measured 1.0 s
-        # vs 1.1-2.4 s per batch for the threaded two-sink flow, plus the
-        # per-batch persist/unpersist churn removed.
-        deterministic = cfg.clock_column is not None and failure is None
+        # The pinned clock makes the derivation value-deterministic, so the
+        # shared prefix is cached only when an injected `failure` Column
+        # (possibly non-deterministic) must split good/bad rows once.
+        # Otherwise each sink recomputes the derivation, position window
+        # included, and the two write jobs overlap instead of serializing
+        # on the cache fill's block locks.
         result = ingest.run_batch(
             batch_df,
-            cfg,
+            batch_cfg,
             failure=failure,
-            persist_intermediate=not deterministic,
+            persist_intermediate=failure is not None,
             blob_name=F.concat(F.col("broker_id"), F.lit(f"-b{batch_id}")),
         )
+
         def do_blobs() -> None:
             if sinks.blob_format == "ocf":
                 # OCF blobs are replay-idempotent WITHOUT an anti-join: the
@@ -297,41 +299,29 @@ def run_stream(
             else:
                 ingest.write_index(result, sinks.index_path)
 
-        if fault_injector is not None:
-            # the crash-window contract (E1 tests): blob write strictly
-            # before the injector, injector strictly before the index write
-            do_blobs()
-            fault_injector(batch_id)
-            do_index()
-        elif cfg.clock_column is None:
-            # WALL-CLOCK mask (production default): a replay that crosses a
-            # mask time boundary (midnight) derives DIFFERENT location_keys,
-            # so the merge anti-joins cannot recognize the first attempt's
-            # rows.  Writing blobs strictly BEFORE the index keeps every
-            # crash state consistent anyway: index rows always point at a
-            # location_key whose blobs were already persisted (a replay
-            # re-writes both under the new key; the first attempt's
-            # index-less blobs are orphaned storage, never dangling
-            # references).  Concurrent sinks would allow the reverse order.
-            do_blobs()
-            do_index()
-        else:
-            # Deterministic clock column: replays derive the SAME
-            # location_keys, so ordering between the sinks carries no
-            # guarantee and they overlap from two driver threads — the
-            # batch's wall-clock is max(blobs, index) instead of the sum.
-            # With no failure hook the intermediate is NOT persisted (see
-            # `deterministic` above): each sink recomputes the derivation,
-            # position window included, and the two jobs run concurrently.
-            # With a failure hook both consume the persisted intermediate
-            # (BlockManager computes each cached partition once; the second
-            # job blocks on the block lock, never recomputes).
+        # Sink order.  A replay re-derives the same location_keys (pinned
+        # clock, batch-scoped blob names), so the two sinks overlap from two
+        # driver threads — max(blobs, index) instead of the sum — with two
+        # exceptions that write blobs strictly before the index:
+        # - batch 0: a crash inside the first batch leaves a checkpoint with
+        #   no commit, which heal_virgin_checkpoint wipes, so the re-run
+        #   plans batch 0 afresh under a NEW timestamp and possibly new
+        #   location_keys.  Blobs first keeps an index row from ever
+        #   pointing at a key whose blobs were never written (the worst case
+        #   is orphaned first-attempt blobs);
+        # - a `fault_injector`, which must run between the two writes.
+        if fault_injector is None and batch_id > 0:
             import concurrent.futures as _cf
 
             with _cf.ThreadPoolExecutor(max_workers=2) as pool:
                 futs = [pool.submit(do_blobs), pool.submit(do_index)]
                 for f in futs:
                     f.result()
+        else:
+            do_blobs()
+            if fault_injector is not None:
+                fault_injector(batch_id)
+            do_index()
         dl = result.deadletter
         if invalid is not None:
             from persistor_spark.functions import keys
@@ -358,8 +348,8 @@ def run_stream(
             dl.observe(dl_obs, F.count(F.lit(1)).alias("n")).write.mode(
                 "append"
             ).parquet(sinks.deadletter_path)
-            n_dl = dl_obs.get["n"]
-        n_idx = idx_obs.get["n"]
+            n_dl = ingest.observed_count(dl_obs)
+        n_idx = ingest.observed_count(idx_obs)
         metrics.batches += 1
         metrics.indexed += n_idx
         metrics.dead_lettered += n_dl

@@ -85,3 +85,32 @@ def test_cli_resubmit_ocf_blobs(spark, source_dir, tmp_path, capsys):
     )
     assert rc == 0
     assert summary["published"] == summary["starting"] == emitted["indexed"]
+
+
+def test_cli_batch_ingest_pins_one_instant(spark, source_dir, tmp_path, capsys, monkeypatch):
+    """Without --stream the blob and index writes are two actions; both must
+    read the ONE pinned instant, or a run crossing midnight would index
+    location_keys that no blob row carries."""
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from persistor_spark.config import IngestConfig
+
+    instant = datetime(2023, 12, 31, 23, 59, 59, 999000, tzinfo=timezone.utc)
+    monkeypatch.setattr(cli, "_ingest_instant", lambda: instant)
+    out = str(tmp_path / "out")
+    rc, emitted = _run_cli(
+        capsys,
+        ["ingest", "--source", source_dir, "--out", out, "--blob-format", "parquet"],
+    )
+    assert rc == 0 and emitted["indexed"] > 0
+    idx = spark.read.parquet(f"{out}/index")
+    blobs = spark.read.parquet(f"{out}/blobs")
+    assert idx.join(blobs, "location_key", "left_anti").count() == 0
+    assert all("/2023/12/31/" in r[0] for r in idx.select("location_key").collect())
+    skew = IngestConfig().indexer_clock_skew_s
+    clocks = idx.select(
+        (F.unix_millis("indexer_ingestion_time") - skew * 1000).alias("ms")
+    ).distinct().collect()
+    assert [r["ms"] for r in clocks] == [int(instant.timestamp() * 1000)]

@@ -154,6 +154,50 @@ def test_write_index_merge_raises_on_corrupt_table(spark, sf_dir, tmp_path):
         ingest.write_index_merge(res, str(path))
 
 
+def test_merge_append_checks_existence_before_reading(spark, sf_dir, tmp_path):
+    """A missing table is found by a filesystem check, not by a failed read
+    (which logs a PATH_NOT_FOUND stack trace once an Observation has run);
+    the append and its count are one write job, and a replay appends 0."""
+    msgs = fixtures.load_messages(spark, sf_dir).limit(10)
+    res = ingest.run_batch(msgs, fixtures.fixture_ingest_config())
+    path = str(tmp_path / "idx")
+    reads = []
+
+    def read_existing():
+        reads.append(path)
+        return spark.read.parquet(path)
+
+    def merge():
+        return ingest._merge_append(
+            res.index_metadata,
+            path,
+            read_existing,
+            ["unique_id"],
+            lambda new: new.write.mode("append").parquet(path),
+        )
+
+    assert merge() == 10
+    assert reads == []
+    assert merge() == 0
+    assert reads == [path]
+    assert spark.read.parquet(path).count() == 10
+
+
+def test_blob_merge_after_empty_first_batch(spark, sf_dir, tmp_path):
+    """An empty partitioned append leaves a table directory with no data
+    files; the next merge must treat it as empty, not fail on schema
+    inference."""
+    msgs = fixtures.load_messages(spark, sf_dir).limit(10)
+    cfg = fixtures.fixture_ingest_config()
+    path = str(tmp_path / "blobs")
+    empty = ingest.run_batch(msgs.limit(0), cfg)
+    assert ingest.write_blobs_merge(empty, path, fmt="parquet") == 0
+    res = ingest.run_batch(msgs, cfg)
+    assert ingest.write_blobs_merge(res, path, fmt="parquet") == 10
+    assert ingest.write_blobs_merge(res, path, fmt="parquet") == 0
+    assert spark.read.parquet(path).count() == 10
+
+
 def test_additional_metadata_excludes_promoted(ingested):
     """Promoted business keys are deleted from the metadata map
     (sender.go:155-156)."""

@@ -341,3 +341,41 @@ def test_windowed_analytics_invariants(spark, rows):
 
     psi = profiling.psi_by_group(df, "off", "event_type", n_buckets=4).collect()
     assert all(r["psi"] >= 0.0 for r in psi)
+
+
+# -- ingest position tie-break: uncached sinks agree on tied unique_ids -------
+
+_tie_group_sizes = st.lists(st.integers(min_value=1, max_value=4), min_size=1, max_size=5).filter(
+    lambda sizes: max(sizes) >= 2
+)
+
+
+@given(_tie_group_sizes, st.randoms(use_true_random=False))
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+def test_tied_unique_ids_round_trip_through_uncached_sinks(spark, sizes, rnd):
+    """A micro-batch may carry one (broker_id, broker_msg_id) several times
+    with different payloads (a redelivery after an upstream edit).  Without
+    the cache each sink evaluates the position window on its own, and the
+    two evaluations may see the batch's rows in different orders; model that
+    as the index derived from one arrival order and the blobs from the
+    reverse.  The D9 position-align join must still give every index row its
+    own payload."""
+    from persistor_spark import fixtures
+    from persistor_spark.plans import ingest, resubmit
+    from persistor_spark.schemas import MESSAGE_SCHEMA
+
+    t = datetime(2024, 1, 1)
+    rows = [
+        ("b0", f"m{g}", f"tag-{g}-{j}", f"payload-{g}-{j}", {}, None, None, "v1", t, t, 0, None)
+        for g, size in enumerate(sizes)
+        for j in range(size)
+    ]
+    rnd.shuffle(rows)
+    cfg = fixtures.fixture_ingest_config()
+    index_side = ingest.run_batch(spark.createDataFrame(rows, MESSAGE_SCHEMA), cfg)
+    blob_side = ingest.run_batch(spark.createDataFrame(rows[::-1], MESSAGE_SCHEMA), cfg)
+    got = resubmit.align(index_side.index_metadata, blob_side.blob_records).collect()
+    assert len(got) == len(rows)
+    assert {r["ordering_key"]: r["payload"] for r in got} == {
+        r[2]: r[3] for r in rows
+    }

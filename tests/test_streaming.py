@@ -222,6 +222,118 @@ def test_midbatch_crash_replay_is_exactly_once(spark, tmp_path, chunked_messages
     assert blobs.count() == idx.count()
 
 
+def _logged_batch_timestamps(sinks) -> dict:
+    """batch_id -> batchTimestampMs from the checkpoint's offset log."""
+    import os
+
+    logged = {}
+    offsets = os.path.join(sinks.checkpoint_path, "offsets")
+    for name in os.listdir(offsets):
+        if name.isdigit():
+            with open(os.path.join(offsets, name)) as fh:
+                meta = json.loads(fh.read().splitlines()[1])
+            logged[int(name)] = meta["batchTimestampMs"]
+    return logged
+
+
+def _assert_batch_clocks(idx, skew_s: int, logged: dict) -> None:
+    """Every index row's indexer_ingestion_time - skew is its batch's logged
+    batchTimestampMs (a source chunk may be empty, so not every logged
+    batch indexes rows)."""
+    rows = idx.select(
+        F.regexp_extract("location_key", r"-b(\d+)\.", 1).cast("int").alias("b"),
+        (F.unix_millis("indexer_ingestion_time") - skew_s * 1000).alias("ms"),
+    ).distinct()
+    got = {(r["b"], r["ms"]) for r in rows.collect()}
+    assert len(got) >= 2
+    assert got <= set(logged.items())
+
+
+def test_wallclock_clock_is_the_logged_batch_timestamp(spark, tmp_path, chunked_messages):
+    """With no clock column the ingest clock is each micro-batch's
+    `offsets/<id>` batchTimestampMs, the timestamp Spark reuses on replay,
+    not a per-action current_timestamp()."""
+    from dataclasses import replace
+
+    _, src = chunked_messages
+    cfg = replace(fixtures.fixture_ingest_config(), clock_column=None)
+    sinks = _sinks(tmp_path, "out_clock")
+    q, metrics = ingest_stream.run_stream(
+        ingest_stream.file_stream(spark, src, max_files_per_trigger=1), cfg, sinks
+    )
+    assert q.awaitTermination(300)
+    assert metrics.batches >= 3
+    idx = spark.read.parquet(sinks.index_path)
+    _assert_batch_clocks(idx, cfg.indexer_clock_skew_s, _logged_batch_timestamps(sinks))
+
+
+def test_wallclock_midbatch_crash_replay_is_exactly_once(
+    spark, tmp_path, chunked_messages, monkeypatch
+):
+    """The wall-clock default under a crash between the blob and index
+    writes of a batch after batch 0: the replay re-derives the first
+    attempt's location_keys, so the blob merge appends nothing and every
+    index row resolves to exactly one blob record."""
+    from dataclasses import replace
+
+    from persistor_spark.plans import ingest, resubmit
+
+    _, src = chunked_messages
+    cfg = replace(fixtures.fixture_ingest_config(), clock_column=None)
+    sinks = _sinks(tmp_path, "out8")
+
+    blob_appends = []  # rows appended by each blob merge call, in order
+    real_merge = ingest.write_blobs_merge
+
+    def recording_merge(*args, **kwargs):
+        n = real_merge(*args, **kwargs)
+        blob_appends.append(n)
+        return n
+
+    monkeypatch.setattr(ingest, "write_blobs_merge", recording_merge)
+
+    def batch_keys(table, batch_id):
+        return {
+            r[0]
+            for r in table.filter(F.col("location_key").contains(f"-b{batch_id}."))
+            .select("location_key")
+            .distinct()
+            .collect()
+        }
+
+    first_attempt = {}
+    calls = []
+
+    def crash_once(batch_id):
+        calls.append((batch_id, blob_appends[-1]))
+        # the first non-empty batch after batch 0 (a source chunk may be
+        # empty, and the stream's file order is not fixed)
+        if batch_id > 0 and blob_appends[-1] > 0 and not first_attempt:
+            first_attempt["batch"] = batch_id
+            first_attempt["keys"] = batch_keys(spark.read.parquet(sinks.blob_path), batch_id)
+            raise RuntimeError("injected: crashed between blob and index write")
+
+    total = ingest_stream.run_stream_supervised(
+        lambda: ingest_stream.file_stream(spark, src, max_files_per_trigger=1),
+        cfg,
+        sinks,
+        fault_injector=crash_once,
+    )
+    assert total.batches >= 3
+    crashed = first_attempt["batch"]
+    attempts = [n for b, n in calls if b == crashed]
+    assert len(attempts) == 2 and attempts[0] > 0 and attempts[1] == 0
+
+    idx = spark.read.parquet(sinks.index_path)
+    blobs = spark.read.parquet(sinks.blob_path)
+    assert first_attempt["keys"]
+    assert batch_keys(idx, crashed) == first_attempt["keys"]
+    assert idx.count() == idx.select("unique_id").distinct().count()
+    assert blobs.count() == idx.count()
+    assert resubmit.align(idx, blobs).count() == idx.count()
+    _assert_batch_clocks(idx, cfg.indexer_clock_skew_s, _logged_batch_timestamps(sinks))
+
+
 def test_kafka_source_options_mapping():
     cfg = fixtures.fixture_ingest_config()
     opts = ingest_stream.kafka_source_options(cfg, "broker:9092", "events")
