@@ -162,33 +162,6 @@ def extract_image_features(df: DataFrame) -> DataFrame:
     return df.filter(F.col("media_type") == "image").mapInPandas(run, IMAGE_FEATURES_SCHEMA)
 
 
-AUDIO_FEATURES_SCHEMA = "media_id string, duration_ms long, n_bytes long, mfcc array<float>"
-
-
-def extract_audio_features(df: DataFrame) -> DataFrame:
-    """Audio feature extraction over audio rows (MFCC-shaped output).  Decode
-    is stubbed like the image path — deterministic byte statistics standing in
-    for a real codec+DSP chain; batch shape and schema are real."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = [
-                _fake_decode_image(bytes(c)) if c is not None else [0.0] * _FEATURE_DIM
-                for c in pdf["content"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "duration_ms": pdf["duration_ms"],
-                    "n_bytes": [len(c) if c is not None else 0 for c in pdf["content"]],
-                    "mfcc": feats,
-                }
-            )
-
-    return df.filter(F.col("media_type") == "audio").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-
-
 def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling for video rows: emits one row per sampled timestamp.
     Decode is stubbed (deterministic fake frames); the row-explosion shape and

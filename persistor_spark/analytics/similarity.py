@@ -18,9 +18,7 @@ Three strategies:
   nprobe/C of the data.
 
 The dot product is a JVM `zip_with`+`aggregate` fold over array<double> —
-no Python in the hot path.  (A pandas_udf BLAS variant is provided for
-wide vectors; at dim<=256 the JVM expression wins by avoiding Arrow
-transfer.)
+no Python in the hot path.
 """
 
 from __future__ import annotations
@@ -584,33 +582,13 @@ def kmeans_centroids(
     assign: str = "dot",
 ) -> DataFrame:
     """DataFrame facade over kmeans_train: (cid INT, cv ARRAY<DOUBLE>) —
-    the train-once / probe-many handle ivf_topk and semdedup_pairs accept."""
+    the train-once / probe-many handle semdedup_pairs accepts."""
     cents = kmeans_train(
         vectors, n_centroids, max_iter, id_col, vec_col, seed, n_vectors, assign
     )
     return vectors.sparkSession.createDataFrame(
         [(cid, cv) for cid, cv in cents], "cid int, cv array<double>"
     )
-
-
-def ivf_train(
-    vectors: DataFrame,
-    n_centroids: int = 16,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_vectors: int | None = None,
-) -> DataFrame:
-    """Train the IVF coarse quantizer on L2-NORMALIZED vectors (spherical
-    k-means) — the train-once handle for ivf_topk's `centroids` param.
-    Cosine search needs angular cell geometry; this is the same recipe
-    ivf_topk uses inline, so train-once/probe-many returns identical
-    results."""
-    v = _as_double(vectors, id_col, vec_col)
-    nvec = _normalized(v).select(
-        F.col("id").alias("vec_id"), F.col("v").alias("embedding")
-    )
-    return kmeans_centroids(nvec, n_centroids, max_iter, n_vectors=n_vectors)
 
 
 def ivf_topk(
@@ -624,18 +602,14 @@ def ivf_topk(
     query_id_col: str = "vec_id",
     exclude_self: bool = True,
     n_vectors: int | None = None,
-    centroids: DataFrame | None = None,
     kmeans_iter: int = 0,
 ) -> DataFrame:
     """IVF-flat approximate top-k.
 
-    Coarse quantizer, in order of preference: a precomputed `centroids`
-    DataFrame (cid, cv) — train once with kmeans_centroids, reuse across
-    probe calls (the FAISS train/search split); `kmeans_iter > 0` — train
-    inline with that many Lloyd iterations; else the deterministic
-    every-(n/C)-th-vector stride (cheapest, recall-weakest).  The probe
-    plan is identical in all three: corpus partitioned by nearest
-    centroid, probes touch nprobe/C of it.
+    Coarse quantizer: with `kmeans_iter > 0`, trained inline with that many
+    Lloyd iterations; else the deterministic every-(n/C)-th-vector stride
+    (cheapest, recall-weakest).  The probe plan is identical in both:
+    corpus partitioned by nearest centroid, probes touch nprobe/C of it.
 
     Pass `n_vectors` when known (table stats / a prior count) to skip the
     driver-side count job this function otherwise needs for the centroid
@@ -650,20 +624,14 @@ def ivf_topk(
     # Assignment and probing then run on RAW vectors: argmax_c dot(v, c)
     # is invariant to positive scaling of v, so normalizing the assigned
     # side would change nothing except paying the O(d^2) per-row normalize.
-    if centroids is not None:
-        cents = _collect_centroids(centroids)
-        nvec = None
-    elif kmeans_iter > 0:
-        nvec = _normalized(v).select(
-            F.col("id").alias("vec_id"), F.col("v").alias("embedding")
-        )
+    nvec = _normalized(v).select(
+        F.col("id").alias("vec_id"), F.col("v").alias("embedding")
+    )
+    if kmeans_iter > 0:
         cents = kmeans_train(
             nvec, n_centroids, kmeans_iter, n_vectors=n_vectors
         )
     else:
-        nvec = _normalized(v).select(
-            F.col("id").alias("vec_id"), F.col("v").alias("embedding")
-        )
         n = n_vectors if n_vectors is not None else v.count()
         step = max(n // n_centroids, 1)
         cents = _collect_centroids(
@@ -707,49 +675,6 @@ def ivf_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", F.col("id").alias("vec_id"), "cos", "rank")
-    )
-
-
-def brute_force_topk_pandas(
-    vectors: DataFrame,
-    queries_rows: list,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized variant: queries held as a NumPy matrix on each
-    executor, scored per Arrow batch with one GEMV per query.  Wins over the
-    expression fold for wide vectors / many queries; provided for parity with
-    the pandas_udf pattern (pyspark_guide.md)."""
-    import numpy as np
-    import pandas as pd
-
-    qids = [r[0] for r in queries_rows]
-    qmat = np.array([r[1] for r in queries_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            sims = (mat @ qmat.T) / np.outer(norms, qnorm)
-            out = {
-                "query_id": np.repeat(qids, len(ids)),
-                "vec_id": np.tile(ids, len(qids)),
-                "cos": np.round(sims.T.ravel(), 4),
-            }
-            yield pd.DataFrame(out)
-
-    from pyspark.sql import Window
-
-    scored = vectors.mapInPandas(score, "query_id long, vec_id long, cos double")
-    scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
     )
 
 

@@ -12,7 +12,11 @@ points (persistor/cmd/*, indexer-api/lib/server.go, resubmitter handler):
 `serve` runs the REST layer itself (persistor_spark.server): the Indexer
 API's four endpoints on --port, and — when --blobs/--out are given — the
 Resubmitter API's three on --resubmit-port (same endpoints, same envelope,
-same 200/206/400 rules as the reference handlers).
+same 200/206/400 rules as the reference handlers).  The Indexer API reads
+the reference's startup environment (server.go:82-108):
+IDX_API_SERVER_ADDRESS (`host:port`, used when --port is not given;
+default 127.0.0.1:8080), IDX_API_USE_TLS (with CERTS) and
+IDX_API_SERVER_TIMEOUT.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import threading
 from datetime import datetime, timezone
 
 from persistor_spark.config import IngestConfig
@@ -215,7 +220,11 @@ def cmd_serve(args) -> int:
 
     maintenance.recover_pending_deletes(spark, args.index)
     indexes = {args.collection: IndexQuery(spark.read.parquet(args.index), cache_counts=True)}
-    servers = [srv.serve_indexer_api(indexes, ("127.0.0.1", args.port))]
+    opts = srv.server_options_from_env()
+    if args.port is not None:
+        opts["addr"] = ("127.0.0.1", args.port)
+    opts.setdefault("addr", ("127.0.0.1", 8080))  # server.go:41 default :8080
+    servers = [srv.serve_indexer_api(indexes, **opts)]
     if args.blobs and args.out:
         servers.append(
             srv.serve_resubmitter_api(
@@ -233,8 +242,6 @@ def cmd_serve(args) -> int:
         }
     })
     try:
-        import threading
-
         threading.Event().wait()  # SIGINT unblocks via KeyboardInterrupt
     except KeyboardInterrupt:
         pass
@@ -305,7 +312,7 @@ def main(argv=None) -> int:
     ps.add_argument("--collection", default="messages")
     ps.add_argument("--blobs", default=None)
     ps.add_argument("--out", default=None)
-    ps.add_argument("--port", type=int, default=8080)  # server.go:41 default :8080
+    ps.add_argument("--port", type=int, default=None)
     ps.add_argument("--resubmit-port", type=int, default=8081)
     ps.set_defaults(fn=cmd_serve)
 

@@ -226,18 +226,18 @@ def sync_marker_for(key: str) -> bytes:
 
 def encode_ocf(
     records: list,
-    schema: dict | None = None,
     codec: str = "deflate",
     sync: bytes | None = None,
     block_records: int = 1000,
 ) -> bytes:
-    """Records -> one OCF blob (header + data blocks), per the Avro spec.
+    """Persistor records -> one OCF blob (header + data blocks) under
+    PERSISTOR_RECORD_SCHEMA, per the Avro spec.
 
     `codec` is `null` or `deflate` (raw RFC-1951 via zlib, the spec's
     required/optional pair; hamba's encoder defaults to null — both decode
     interchangeably).  Blocks of `block_records` keep a huge blob streamable.
     """
-    schema = schema or PERSISTOR_RECORD_SCHEMA
+    schema = PERSISTOR_RECORD_SCHEMA
     if sync is None:
         sync = sync_marker_for(json.dumps(schema, sort_keys=True))
     if codec not in ("null", "deflate"):

@@ -88,12 +88,7 @@ class PosixBlobClient:
             fh.write(data)
 
 
-class _UrlJoinMixin:
-    def join(self, base: str, rel: str) -> str:
-        return base.rstrip("/") + "/" + rel
-
-
-class PrefixRewriteBlobClient(_UrlJoinMixin):
+class PrefixRewriteBlobClient:
     """Maps `<scheme>://bucket/...` writes onto a local directory root — a
     container-testable stand-in for a real cloud SDK client (and the shape a
     gcsfs/adlfs-backed client takes: join URLs, write bytes).  Must live in
@@ -102,6 +97,9 @@ class PrefixRewriteBlobClient(_UrlJoinMixin):
 
     def __init__(self, root: str):
         self.root = root
+
+    def join(self, base: str, rel: str) -> str:
+        return base.rstrip("/") + "/" + rel
 
     def write(self, full_path: str, data: bytes) -> None:
         local = os.path.join(self.root, re.sub(r"^[a-z0-9]+://", "", full_path))
@@ -149,12 +147,12 @@ def _as_dict(metadata) -> dict:
 def write_blobs_ocf(
     result,
     base_dir: str,
-    codec: str = "deflate",
     manifest_path: str | None = None,
 ) -> DataFrame:
-    """Persist blob records as ONE Avro OCF file per location_key under
-    `base_dir/<object path>`; returns the written-blob manifest (collected
-    eagerly so the write is an action, like DataFrame.write).
+    """Persist blob records as ONE deflate-coded Avro OCF file per
+    location_key under `base_dir/<object path>`; returns the written-blob
+    manifest (collected eagerly so the write is an action, like
+    DataFrame.write).
 
     Record layout inside a blob matches the reference exactly:
     {ID: record_id, Data: utf-8 payload bytes, Metadata: attributes},
@@ -187,7 +185,7 @@ def write_blobs_ocf(
             }
             for rid, payload, meta in zip(pdf["record_id"], pdf["payload"], pdf["metadata"])
         ]
-        blob = avro_ocf.encode_ocf(recs, codec=codec, sync=avro_ocf.sync_marker_for(lk))
+        blob = avro_ocf.encode_ocf(recs, sync=avro_ocf.sync_marker_for(lk))
         full = client.join(base_dir, object_path(lk))
         client.write(full, blob)
         return pd.DataFrame(

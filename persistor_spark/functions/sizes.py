@@ -13,13 +13,11 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def message_size(
-    payload: Column | str = "payload", attributes: Column | str = "attributes"
-) -> Column:
-    """Estimated wire size in bytes: payload length + Σ (key + value lengths)
-    over the attribute map.  Null-safe (null payload/attrs contribute 0)."""
-    p = F.col(payload) if isinstance(payload, str) else payload
-    a = F.col(attributes) if isinstance(attributes, str) else attributes
+def message_size() -> Column:
+    """Estimated wire size in bytes of a message row: `payload` length + Σ
+    (key + value lengths) over the `attributes` map.  Null-safe (null
+    payload/attrs contribute 0)."""
+    p, a = F.col("payload"), F.col("attributes")
     # octet_length, not length: the reference sums BYTES (len() over Go
     # strings) to enforce BatchMemory — character counts undercount UTF-8
     # payloads up to 4x, over-admitting batches past the memory bound
@@ -36,7 +34,3 @@ def message_size(
     )
     return payload_len + attr_len
 
-
-def batch_memory_ok(size_col: Column, batch_memory_bytes: int) -> Column:
-    """The BatchMemory admission predicate (config.go:131-133)."""
-    return size_col <= batch_memory_bytes

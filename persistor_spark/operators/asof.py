@@ -1,4 +1,4 @@
-"""As-of and range temporal joins — operators Spark lacks natively,
+"""As-of temporal join — an operator Spark lacks natively,
 expressed as compositions of built-ins (the strategy SURVEY §2.2 prescribes
 for reference-missing operators; DuckDB/kdb expose these as ASOF JOIN).
 
@@ -16,7 +16,7 @@ products; this stays linear in rows per key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def asof_join(
@@ -81,33 +81,3 @@ def asof_join(
     out_cols += [F.col(f"__match.{c}").alias(c) for c in [right_time, *right_cols]]
     return carried.select(*out_cols)
 
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_time: str,
-    range_start: str,
-    range_end: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Interval containment join: left rows matched to right intervals
-    [range_start, range_end) sharing `key`.
-
-    Implemented as an equi-join on the key plus range predicates — Spark
-    plans it as hash/sort-merge on the key with the range as a post-filter;
-    with AQE the skewed-key case splits.  (A bucketed-by-time variant for
-    key-less range joins would bin both sides to interval-sized buckets —
-    not needed for the keyed case.)"""
-    lt = F.col(f"l.{left_time}")
-    return (
-        left.alias("l")
-        .join(
-            right.alias("r"),
-            (F.col(f"l.{key}") == F.col(f"r.{key}"))
-            & (lt >= F.col(f"r.{range_start}"))
-            & (lt < F.col(f"r.{range_end}")),
-            how,
-        )
-        .select("l.*", *[F.col(f"r.{c}").alias(c) for c in right.columns if c != key])
-    )

@@ -39,11 +39,7 @@ _TIME_PART_SQL = {
 }
 
 
-def mask_columns(
-    cfg: StorageConfig,
-    clock: str,
-    attributes: str = "attributes",
-) -> dict[str, Column]:
+def mask_columns(cfg: StorageConfig, clock: str) -> dict[str, Column]:
     """One named Column per mask member, in mask order (storage.go:125-189).
 
     Mask keys are case-insensitive in the reference (storage.go:198) — so
@@ -63,7 +59,7 @@ def mask_columns(
         elif m.startswith("{") and m.endswith("}"):
             attr = m[1:-1]
             cols[f"__mask_{attr}"] = F.expr(
-                f"coalesce(element_at({sql_ident(attributes)}, {sql_str(attr)}),"
+                f"coalesce(element_at(`attributes`, {sql_str(attr)}),"
                 f" '{UNKNOWN}')"
             )
         else:
@@ -83,10 +79,7 @@ def split_location(col: Column) -> tuple[Column, Column]:
 
 
 def blob_column_exprs(
-    cfg: StorageConfig,
-    clock: str,
-    blob_name: Column | None = None,
-    attributes: str = "attributes",
+    cfg: StorageConfig, clock: str, blob_name: Column | None = None
 ) -> tuple[dict[str, Column], Column]:
     """(mask column dict, location_key Column).  location_key is the full
     blob URL `<scheme>://<bucket>/<prefix>/<mask parts>/blob-<name>.<ext>`
@@ -98,7 +91,7 @@ def blob_column_exprs(
     per-part Column-API composition recurs every streaming micro-batch
     (r14 opt, guide §1.2).  `blob_name` stays an opaque Column (callers
     pass arbitrary expressions)."""
-    cols = mask_columns(cfg, clock, attributes)
+    cols = mask_columns(cfg, clock)
     name_col = blob_name if blob_name is not None else F.col("broker_id")
 
     static_parts = [sql_str(f"{cfg.base_url}/{cfg.prefix}/")]

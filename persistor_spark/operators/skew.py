@@ -1,23 +1,19 @@
-"""Skew mitigation: key salting for hot-key aggregations and joins.
+"""Skew mitigation: key salting for hot-key aggregations.
 
 AQE's skew-join split (enabled in session.build_session) handles most skew at
-runtime; salting is the *plan-level* tool for the cases AQE can't fix —
-a groupBy whose single hot key exceeds executor memory, or a broadcast-able
-dimension joined against a skewed fact key.  (SURVEY §4: the reference never
-shuffles, so skew is a new concern the Spark engine must own.)
+runtime; salting is the *plan-level* tool for the case AQE can't fix — a
+groupBy whose single hot key exceeds executor memory.  (SURVEY §4: the
+reference never shuffles, so skew is a new concern the Spark engine must own.)
 
-Pattern (aggregation): two-phase — salt the key into `factor` subkeys,
-partial-aggregate per (key, salt), then final-aggregate per key.  The first
-shuffle spreads the hot key over `factor` reducers; the second shuffles only
+Pattern: two-phase — salt the key into `factor` subkeys, partial-aggregate
+per (key, salt), then final-aggregate per key.  The first shuffle spreads the
+hot key over `factor` reducers; the second shuffles only
 `distinct_keys × factor` rows.
-
-Pattern (join): replicate the small side `factor` times (one copy per salt),
-salt the big side randomly — every big-side row still meets its match.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 SALT_COL = "__salt"
 
@@ -31,15 +27,6 @@ def with_salt(df: DataFrame, factor: int, deterministic_col: str | None = None) 
     else:
         salt = (F.rand() * factor).cast("int")
     return df.withColumn(SALT_COL, salt)
-
-
-def salted_count(
-    df: DataFrame, key_cols: list, factor: int = 16, deterministic_col: str | None = None
-) -> DataFrame:
-    """Two-phase skew-safe count per key."""
-    salted = with_salt(df, factor, deterministic_col)
-    partial = salted.groupBy(*key_cols, SALT_COL).agg(F.count(F.lit(1)).alias("__n"))
-    return partial.groupBy(*key_cols).agg(F.sum("__n").alias("n"))
 
 
 def salted_agg(
@@ -57,19 +44,3 @@ def salted_agg(
     partial = salted.groupBy(*key_cols, SALT_COL).agg(*partial_aggs)
     return partial.groupBy(*key_cols).agg(*final_aggs)
 
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    factor: int = 8,
-    how: str = "inner",
-    deterministic_col: str | None = None,
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, explode the small side once
-    per salt value, join on (key, salt)."""
-    big_salted = with_salt(big, factor, deterministic_col)
-    small_exploded = small.withColumn(
-        SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(factor)]))
-    )
-    return big_salted.join(small_exploded, [on, SALT_COL], how).drop(SALT_COL)

@@ -13,16 +13,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from persistor_spark.functions.sqlq import sql_ident, sql_str
+from persistor_spark.functions.sqlq import sql_str
 
 UNKNOWN = "unknown"
 
 
-def version_column(key: str, attributes: str = "attributes") -> Column:
+def version_column(key: str) -> Column:
     """Version value for one key: the attribute value, else 'unknown'
     (addMessageToVersionMap, version_batching.go:29-71).  One SQL
     expression, not a Column-call chain — this is built per ingest batch
     and each Column call is a driver py4j round-trip (r14 opt, §1.2)."""
     return F.expr(
-        f"coalesce(element_at({sql_ident(attributes)}, {sql_str(key)}), '{UNKNOWN}')"
+        f"coalesce(element_at(`attributes`, {sql_str(key)}), '{UNKNOWN}')"
     )

@@ -33,6 +33,9 @@ from __future__ import annotations
 
 import os
 
+# Every table these helpers list is parquet.
+_DATA_SUFFIX = ".parquet"
+
 
 def _local_path(path: str) -> str | None:
     """The local-filesystem path when `path` is scheme-less or file:,
@@ -119,42 +122,12 @@ def glob(spark, pattern: str) -> list[str]:
     return [s.getPath().toString() for s in statuses]
 
 
-def list_files(spark, path: str, suffix: str = ".parquet") -> list[str]:
-    """Recursively list files under `path` with the given suffix.  Local
-    paths walk the OS directly (per-file Py4J round-trips would dominate
-    on fragmented layouts — see _local_path); remote schemes use the
-    FileSystem's recursive iterator."""
-    local = _local_path(path)
-    if local is not None:
-        if not os.path.exists(local):
-            return []
-        return [
-            os.path.join(dp, f)
-            for dp, _, files in os.walk(local)
-            for f in files
-            if f.endswith(suffix)
-        ]
-    fs = fs_for(spark, path)
-    p = jpath(spark, path)
-    if not fs.exists(p):
-        return []
-    out = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().toString()
-        if name.endswith(suffix):
-            out.append(name)
-    return out
-
-
-def list_files_with_size(
-    spark, path: str, suffix: str = ".parquet"
-) -> list[tuple[str, int]]:
-    """Recursively list (file, length) pairs under `path` with the given
-    suffix — the per-file sizing `compact_small_files` plans from.  Same
-    local/remote dispatch as list_files (one Py4J round-trip per file
-    would dominate on exactly the fragmented layouts this serves)."""
+def list_files_with_size(spark, path: str) -> list[tuple[str, int]]:
+    """Recursively list (file, length) pairs of the `.parquet` data files
+    under `path` — the per-file sizing `compact_small_files` plans from.
+    Local paths walk the OS directly (per-file Py4J round-trips would
+    dominate on fragmented layouts — see _local_path); remote schemes use
+    the FileSystem's recursive iterator."""
     local = _local_path(path)
     if local is not None:
         if not os.path.exists(local):
@@ -163,7 +136,7 @@ def list_files_with_size(
             (os.path.join(dp, f), os.path.getsize(os.path.join(dp, f)))
             for dp, _, files in os.walk(local)
             for f in files
-            if f.endswith(suffix)
+            if f.endswith(_DATA_SUFFIX)
         ]
     fs = fs_for(spark, path)
     p = jpath(spark, path)
@@ -174,35 +147,19 @@ def list_files_with_size(
     while it.hasNext():
         st = it.next()
         name = st.getPath().toString()
-        if name.endswith(suffix):
+        if name.endswith(_DATA_SUFFIX):
             out.append((name, st.getLen()))
     return out
 
 
-def total_size(spark, path: str, suffix: str = ".parquet") -> int:
-    """Sum of file lengths under `path` with the given suffix (bytes).
-    Same local/remote dispatch as list_files."""
-    local = _local_path(path)
-    if local is not None:
-        if not os.path.exists(local):
-            return 0
-        return sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, files in os.walk(local)
-            for f in files
-            if f.endswith(suffix)
-        )
-    fs = fs_for(spark, path)
-    p = jpath(spark, path)
-    if not fs.exists(p):
-        return 0
-    total = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().toString().endswith(suffix):
-            total += st.getLen()
-    return total
+def list_files(spark, path: str) -> list[str]:
+    """The `.parquet` data files under `path`, recursively."""
+    return [f for f, _ in list_files_with_size(spark, path)]
+
+
+def total_size(spark, path: str) -> int:
+    """Sum of the `.parquet` data file lengths under `path` (bytes)."""
+    return sum(n for _, n in list_files_with_size(spark, path))
 
 
 def write_text(spark, path: str, text: str) -> None:

@@ -275,7 +275,7 @@ def run_batch(
 
 
 def _writer_lock(lock_path: str | None):
-    """The cross-process flock of the merge writers' `lock_path`, or a no-op."""
+    """The cross-process flock of write_index_merge's `lock_path`, or a no-op."""
     if lock_path is None:
         return contextlib.nullcontext()
     from persistor_spark.sources._statelock import state_lock
@@ -413,9 +413,7 @@ def write_blobs(result: IngestResult, path: str, fmt: str = "avro") -> None:
     _append_blobs(result.blob_records, result.mask_column_names, path, fmt)
 
 
-def write_blobs_merge(
-    result: IngestResult, path: str, fmt: str = "avro", lock_path: str | None = None
-) -> int:
+def write_blobs_merge(result: IngestResult, path: str, fmt: str = "avro") -> int:
     """Exactly-once blob append: anti-join the batch's records on
     (location_key, record_id) against what's already persisted, append only
     the new rows.  Returns the number of rows appended.
@@ -427,43 +425,15 @@ def write_blobs_merge(
     Scale: the existing side projects only the two join-key columns
     (column-pruned scan) and the join hash-distributes on location_key;
     on Delta/Iceberg this is MERGE WHEN NOT MATCHED.
-
-    `lock_path`: serialize concurrent WRITERS, exactly as in
-    write_index_merge (see its docstring for when it is required).
     """
     spark = result.blob_records.sparkSession
     fmt = resolve_blob_format(spark, fmt)
-    with _writer_lock(lock_path):
-        return _merge_append(
-            result.blob_records,
-            path,
-            lambda: spark.read.format(fmt).load(path),
-            ["location_key", "record_id"],
-            lambda new: _append_blobs(new, result.mask_column_names, path, fmt),
-        )
-
-
-def write_index_bucketed(
-    result: IngestResult,
-    table_name: str,
-    n_buckets: int = 64,
-    mode: str = "append",
-) -> None:
-    """Catalog-managed index table BUCKETED by unique_id (hash buckets +
-    in-bucket sort).  Joins and IN-list semi-joins on unique_id against
-    another table bucketed the same way read co-located buckets directly —
-    NO shuffle on either side (the plan shows SortMergeJoin with zero
-    Exchange).  This is the 100 TB shape for the resubmit metadata join and
-    repeated id-set lookups: the expensive hash-distribute happens once at
-    write time, every subsequent join is free.  (Mongo gets this from the
-    _id index; Delta/Iceberg deployments would use liquid clustering or
-    sorted compaction instead.)"""
-    (
-        result.index_metadata.write.mode(mode)
-        .bucketBy(n_buckets, "unique_id")
-        .sortBy("unique_id")
-        .format("parquet")
-        .saveAsTable(table_name)
+    return _merge_append(
+        result.blob_records,
+        path,
+        lambda: spark.read.format(fmt).load(path),
+        ["location_key", "record_id"],
+        lambda new: _append_blobs(new, result.mask_column_names, path, fmt),
     )
 
 

@@ -100,14 +100,6 @@ def compact(
     return n_files
 
 
-def plan_has_shuffle(df: DataFrame) -> bool:
-    """True if the physical plan repartitions data across the cluster.
-    Broadcast exchanges don't count — they replicate a small side, which is
-    the cheap kind; the scale hazard is `Exchange hashpartitioning`."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" in plan or "Exchange rangepartitioning" in plan
-
-
 def write_minmax_manifest(
     spark: SparkSession, table_path: str, manifest_path: str, col: str = "unique_id"
 ) -> int:
@@ -320,11 +312,10 @@ def manifest_lookup_resilient(
     manifest_rows: list,
     values,
     manifest_path: str,
-    col: str = "unique_id",
 ):
-    """Point lookup through a RESIDENT manifest that may have gone STALE
-    under a concurrent compaction (r12 VERDICT #8c): a serving layer
-    holds manifest rows in memory across many lookups, while
+    """`unique_id` point lookup through a RESIDENT manifest that may have
+    gone STALE under a concurrent compaction (r12 VERDICT #8c): a serving
+    layer holds manifest rows in memory across many lookups, while
     `maintenance.compact_small_files` swaps data files underneath it —
     readers hold no lock, so a resident entry can point at a file the
     swap has since removed.  Try the pruned scan against the resident
@@ -347,15 +338,13 @@ def manifest_lookup_resilient(
     from persistor_spark.plans import fsutil
 
     try:
-        df = manifest_pruned_scan_cached(
-            spark, table_path, manifest_rows, values, col
-        )
+        df = manifest_pruned_scan_cached(spark, table_path, manifest_rows, values)
         return df.localCheckpoint(eager=True), None
     except Exception as exc:  # noqa: BLE001 — classified below
         if not fsutil.is_missing_file_error(exc):
             raise
     fresh = load_manifest(spark, manifest_path)
-    df = manifest_pruned_scan_cached(spark, table_path, fresh, values, col)
+    df = manifest_pruned_scan_cached(spark, table_path, fresh, values)
     return df.localCheckpoint(eager=True), fresh
 
 

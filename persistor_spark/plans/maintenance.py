@@ -51,6 +51,9 @@ import uuid
 
 from persistor_spark.plans import fsutil
 
+# The file size compact_small_files merges small files up to.
+_TARGET_FILE_BYTES = 128 << 20
+
 
 def swap_tag() -> str:
     """Suffix for `__compact_` / `__trash_` swap siblings: a `t` sentinel,
@@ -254,7 +257,6 @@ def compact_small_files(
     spark,
     path: str,
     partition_col: str | None = None,
-    target_file_bytes: int = 128 << 20,
     small_file_bytes: int | None = None,
     manifest_path: str | None = None,
     manifest_col: str = "unique_id",
@@ -266,9 +268,9 @@ def compact_small_files(
     per maintenance cycle; when 90% of the data already sits in
     target-sized files, this touches only the 10% appendix).
 
-    A file is "small" under `small_file_bytes` (default target/2); only
-    directories holding >= 2 small files participate (merging a lone
-    small file buys nothing).  The merged replacements are written to a
+    A file is "small" under `small_file_bytes` (default half the 128 MiB
+    target); only directories holding >= 2 small files participate
+    (merging a lone small file buys nothing).  The merged replacements are written to a
     sibling tmp dir, then swapped in at per-FILE granularity: new files
     move INTO the live directory tree under fresh `cmp-*` names, then the
     originals are removed.  There is no whole-dir rename — the large
@@ -324,7 +326,6 @@ def compact_small_files(
             spark,
             path,
             partition_col,
-            target_file_bytes,
             small_file_bytes,
             manifest_path,
             manifest_col,
@@ -335,7 +336,6 @@ def _compact_small_files_locked(
     spark,
     path,
     partition_col,
-    target_file_bytes,
     small_file_bytes,
     manifest_path,
     manifest_col,
@@ -347,7 +347,7 @@ def _compact_small_files_locked(
     recover_small_compactions(spark, path, _locked=True)
     recover_pending_deletes(spark, path, _locked=True)
     _drop_smallcompact_orphans(spark, path)
-    small_file_bytes = small_file_bytes or target_file_bytes // 2
+    small_file_bytes = small_file_bytes or _TARGET_FILE_BYTES // 2
     all_files = fsutil.list_files_with_size(spark, path)
     groups: dict[str, list[tuple[str, int]]] = {}
     for f, sz in all_files:
@@ -399,7 +399,7 @@ def _compact_small_files_locked(
         df = spark.read.parquet(*small)
         # no shuffle: coalesce the small-file read down to ~target sizes
         writer = df.coalesce(
-            max(1, math.ceil(small_bytes / target_file_bytes))
+            max(1, math.ceil(small_bytes / _TARGET_FILE_BYTES))
         ).write
     writer.parquet(tmp)
     tmp_base = tmp.rsplit("/", 1)[1]
@@ -629,15 +629,9 @@ def _drop_smallcompact_orphans(spark, path: str) -> int:
     return removed
 
 
-def delete_by_key(
-    spark,
-    table_path: str,
-    manifest_path: str,
-    keys,
-    col: str = "unique_id",
-) -> dict:
+def delete_by_key(spark, table_path: str, manifest_path: str, keys) -> dict:
     """Targeted delete (the GDPR / right-to-be-forgotten shape): remove
-    every row whose `col` is in `keys`, REWRITING ONLY the data files
+    every row whose `unique_id` is in `keys`, REWRITING ONLY the data files
     whose manifest [min_v, max_v] range can contain one of the keys.
     Untouched files are neither read nor written — at 100 TB a delete of a
     handful of ids touches a handful of files out of ~10^6, which is the
@@ -674,10 +668,11 @@ def delete_by_key(
     # single-maintenance-process contract serializes (see
     # compact_small_files' note / _recovery_guard's docstring).
     with _recovery_guard(table_path):
-        return _delete_by_key_locked(spark, table_path, manifest_path, keys, col)
+        return _delete_by_key_locked(spark, table_path, manifest_path, keys)
 
 
-def _delete_by_key_locked(spark, table_path, manifest_path, keys, col) -> dict:
+def _delete_by_key_locked(spark, table_path, manifest_path, keys) -> dict:
+    col = "unique_id"
     import json
 
     from pyspark.sql import functions as F

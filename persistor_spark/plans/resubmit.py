@@ -153,9 +153,7 @@ def locations_touched(metadata: DataFrame) -> DataFrame:
 
 
 def resubmit_observed(
-    metadata: DataFrame,
-    blob_records: DataFrame,
-    broadcast_metadata: bool | None = None,
+    metadata: DataFrame, blob_records: DataFrame
 ) -> tuple[DataFrame, "Observation", "Observation"]:
     """resubmit() with `df.observe()` instrumentation: counters are collected
     as a side effect of the ONE action that materializes the records — no
@@ -169,8 +167,6 @@ def resubmit_observed(
     meta_obs = Observation("resubmit_meta")
     rec_obs = Observation("resubmit_records")
     meta = metadata.observe(meta_obs, F.count(F.lit(1)).alias("starting"))
-    if broadcast_metadata:
-        meta = F.broadcast(meta)
     records = _join(meta, blob_records).observe(
         rec_obs, F.count(F.lit(1)).alias("published")
     )

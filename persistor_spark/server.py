@@ -412,20 +412,21 @@ def parse_go_duration(s: str) -> float:
     return sign * sum(float(n) * _DURATION_UNITS[u] for n, u in parts)
 
 
-def server_options_from_env(environ=None, prefix: str = "IDX_API") -> dict:
+def server_options_from_env(environ=None) -> dict:
     """The loadServerOptionsFromEnv mapping (server.go:82-108): address,
-    TLS flag, read-header timeout.  Malformed values raise, mirroring the
-    reference's startup failure (ParsingEnvVariableFailed)."""
+    TLS flag, read-header timeout, as serve_indexer_api keyword arguments
+    (`cli serve` reads them at startup).  Malformed values raise, mirroring
+    the reference's startup failure (ParsingEnvVariableFailed)."""
     env = os.environ if environ is None else environ
     opts: dict = {}
-    if addr := env.get(f"{prefix}_SERVER_ADDRESS"):
+    if addr := env.get(ADDRESS_ENV):
         host, _, port = addr.rpartition(":")
         opts["addr"] = (host or "0.0.0.0", int(port))
-    if tls := env.get(f"{prefix}_USE_TLS"):
+    if tls := env.get(USE_TLS_ENV):
         if tls.lower() not in ("true", "false", "1", "0"):
             raise ValueError(f"invalid bool: {tls!r}")
         opts["tls"] = tls.lower() in ("true", "1")
-    if timeout := env.get(f"{prefix}_SERVER_TIMEOUT"):
+    if timeout := env.get(READ_TIMEOUT_ENV):
         opts["read_header_timeout_s"] = parse_go_duration(timeout)
     return opts
 

@@ -67,14 +67,14 @@ def pubsub_stream(spark, cfg: IngestConfig, project: str, subscription: str):
         ) from exc
 
 
-def kafka_sink_options(bootstrap: str, topic: str, batch_size: int = 5000, batch_bytes: int = 1_000_000) -> dict:
-    """K7 (sender/initialization.go:35-91): publisher batch settings.  The
-    `key` column of the sink DataFrame carries the ordering key (R7: broker
-    preserves per-key order per partition)."""
+def kafka_sink_options(bootstrap: str, topic: str) -> dict:
+    """K7 (sender/initialization.go:35-91): publisher batch settings, a
+    1 MB producer batch.  The `key` column of the sink DataFrame carries the
+    ordering key (R7: broker preserves per-key order per partition)."""
     return {
         "kafka.bootstrap.servers": bootstrap,
         "topic": topic,
-        "kafka.batch.size": str(batch_bytes),
+        "kafka.batch.size": "1000000",
         "kafka.linger.ms": "5",
         "kafka.max.in.flight.requests.per.connection": "1",  # per-key ordering
         "kafka.enable.idempotence": "true",

@@ -22,8 +22,8 @@ with `error_category` set instead of aborting the whole replay.
 
 Backends, resolved per scheme like formats/ocf_io.register_blob_client:
 
-- a directory store (default): `<root>/<collection>` is a parquet (or
-  json) table with columns (id, data, metadata) — the sandbox stand-in
+- a directory store (default): `<root>/<collection>` is a parquet table
+  with columns (id, data, metadata) — the sandbox stand-in
   with the same keyed-document access pattern;
 - real MongoDB via the Spark connector: `mongo_connector_options()` maps
   the reference's env contract onto `spark.mongodb.read.*` options; the
@@ -81,19 +81,12 @@ def parse_location_keys(locations: DataFrame) -> DataFrame:
     )
 
 
-def read_collection(
-    spark: SparkSession, root: str, collection: str, fmt: str = "parquet"
-) -> DataFrame:
+def read_collection(spark: SparkSession, root: str, collection: str) -> DataFrame:
     """One collection of the directory store as a DataFrame."""
-    return spark.read.format(fmt).load(os.path.join(root, collection))
+    return spark.read.parquet(os.path.join(root, collection))
 
 
-def fetch_payloads(
-    spark: SparkSession,
-    root: str,
-    locations: DataFrame,
-    fmt: str = "parquet",
-) -> DataFrame:
+def fetch_payloads(spark: SparkSession, root: str, locations: DataFrame) -> DataFrame:
     """Fetch the payload for every requested `location_key` from a
     directory store rooted at `root`.
 
@@ -123,7 +116,7 @@ def fetch_payloads(
         if not name:
             continue
         try:
-            one = read_collection(spark, root, name, fmt)
+            one = read_collection(spark, root, name)
         except AnalysisException as exc:
             cond = getattr(exc, "getCondition", None)
             cond = cond() if callable(cond) else None
@@ -161,9 +154,7 @@ def fetch_payloads(
     return fetched.select(*cols).unionByName(bad.select(*cols))
 
 
-def write_collection(
-    records: DataFrame, root: str, collection: str, fmt: str = "parquet"
-) -> None:
+def write_collection(records: DataFrame, root: str, collection: str) -> None:
     """Populate one collection of the directory store: (id, data[, ...])
     rows, the shape the reference's MongoRecord carries (mongo.go:41-45)."""
-    records.write.format(fmt).mode("overwrite").save(os.path.join(root, collection))
+    records.write.mode("overwrite").parquet(os.path.join(root, collection))

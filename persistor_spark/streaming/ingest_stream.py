@@ -416,31 +416,34 @@ def heal_virgin_checkpoint(checkpoint_path: str) -> bool:
     return True
 
 
+# Queries run_stream_supervised starts before it gives up.
+_MAX_RESTARTS = 100
+
+
 def run_stream_supervised(
     stream_factory,
     cfg: IngestConfig,
     sinks: StreamSinks,
     error_budget=None,
     failure=None,
-    max_restarts: int = 100,
-    exactly_once_index: bool = True,
-    exactly_once_blobs: bool = True,
     fault_injector=None,
 ) -> StreamMetrics:
     """E3 flow-control supervisor (run.go:157-187: 50 errors/min then stop;
     processing error -> continue; fatal -> stop).
 
-    Runs availableNow queries built by `stream_factory()` until the source
-    drains cleanly.  A temporary query failure leaves its batch UNCOMMITTED
-    in the checkpoint; the restart replays it — the Spark shape of the
-    reference's per-message nack/redelivery, at micro-batch granularity.
+    Runs availableNow queries built by `stream_factory()`, into both
+    exactly-once merge sinks, until the source drains cleanly (at most
+    _MAX_RESTARTS queries).  A temporary query failure leaves its batch
+    UNCOMMITTED in the checkpoint; the restart replays it — the Spark shape
+    of the reference's per-message nack/redelivery, at micro-batch
+    granularity.
     Fatal errors and budget exhaustion propagate (executor stop).
     """
     from persistor_spark.streaming import flow_control as fc
 
     budget = error_budget or fc.ErrorBudget()
     total = StreamMetrics()
-    for _ in range(max_restarts):
+    for _ in range(_MAX_RESTARTS):
         # crash-during-first-batch heal (see heal_virgin_checkpoint): a
         # dead process can leave a no-commit checkpoint Spark refuses to
         # resume; run it per restart so an in-loop kill window heals too
@@ -450,8 +453,6 @@ def run_stream_supervised(
             cfg,
             sinks,
             failure=failure,
-            exactly_once_index=exactly_once_index,
-            exactly_once_blobs=exactly_once_blobs,
             fault_injector=fault_injector,
         )
         try:
@@ -471,7 +472,7 @@ def run_stream_supervised(
             total.dead_lettered += metrics.dead_lettered
             total.history.extend(metrics.history)
         return total  # drained without error
-    raise fc.BudgetExhausted(f"gave up after {max_restarts} restarts")
+    raise fc.BudgetExhausted(f"gave up after {_MAX_RESTARTS} restarts")
 
 
 def stop_gracefully(query, timeout_s: int = 60) -> None:

@@ -53,28 +53,6 @@ def _eviction_ts_ms(state, batch_max_event_ms: int, retention_ms: int) -> int:
     return max(state.getCurrentWatermarkMs(), batch_max_event_ms) + retention_ms
 
 
-def tumbling_counts(
-    messages: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    time_col: str = "ingestion_time",
-    key_col: str = "broker_id",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per key: the event-time version of
-    the reference's per-batch throughput metrics (E4)."""
-    return (
-        messages.withWatermark(time_col, watermark)
-        .groupBy(F.window(time_col, window).alias("win"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            key_col,
-            "n",
-        )
-    )
-
-
 def sliding_throughput(
     messages: DataFrame,
     window: str = "10 minutes",

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from persistor_spark.analytics import dedup, multimodal, similarity, text
 from persistor_spark.sources.registry import load_table
+from plan_asserts import plan_has_shuffle
 
 
 @pytest.fixture(scope="module")
@@ -371,14 +372,13 @@ def test_centroid_assignment_no_shuffle_and_exact(embs):
     argmax-dot centroid with lowest-cid tie-break."""
     import numpy as np
 
-    from persistor_spark.plans import layout
 
     cents = similarity.kmeans_train(embs, n_centroids=8, max_iter=1)
     v = embs.select(
         F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("v")
     )
     assigned = v.select("id", similarity._argmax_cid(F.col("v"), cents).alias("cid"))
-    assert not layout.plan_has_shuffle(assigned)
+    assert not plan_has_shuffle(assigned)
 
     got = {r["id"]: r["cid"] for r in assigned.collect()}
     cmat = np.array([cv for _, cv in cents])
@@ -399,11 +399,6 @@ def test_ivf_kmeans_recall_not_worse_than_stride(embs, brute_topk):
 
     r_kmeans = recall(kmeans_iter=2)
     assert r_kmeans >= 0.4, f"k-means IVF recall too low: {r_kmeans}"
-    # train-once / probe-many reuse path returns identical results
-    cents = similarity.ivf_train(embs, n_centroids=8, max_iter=2)
-    got1 = similarity.ivf_topk(embs, q, k=10, n_centroids=8, nprobe=4, centroids=cents).collect()
-    got2 = similarity.ivf_topk(embs, q, k=10, n_centroids=8, nprobe=4, kmeans_iter=2).collect()
-    assert {tuple(r) for r in got1} == {tuple(r) for r in got2}
 
 
 def test_embedding_lsh_pairs_equal_brute_force(embs):
@@ -419,14 +414,6 @@ def test_embedding_lsh_pairs_equal_brute_force(embs):
 def test_embedding_lsh_pairs_plan_has_no_cartesian(embs):
     plan = dedup.embedding_dup_pairs_lsh(embs, 0.4)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-
-
-def test_pandas_topk_matches_expression_topk(embs, brute_topk):
-    q_rows = [(r["vec_id"], r["embedding"]) for r in embs.filter(F.col("vec_id") < 10).collect()]
-    got = similarity.brute_force_topk_pandas(embs, q_rows, k=10).collect()
-    truth = {(r["query_id"], r["vec_id"], r["cos"]) for r in brute_topk}
-    found = {(r["query_id"], r["vec_id"], r["cos"]) for r in got}
-    assert truth == found
 
 
 def test_cosine_of_self_is_one(spark):
@@ -499,16 +486,6 @@ def test_repartition_for_decode_preserves_rows(media):
     out = multimodal.repartition_for_decode(media, target_bytes_per_partition=1 << 16)
     assert out.count() == media.count()
     assert out.rdd.getNumPartitions() >= 1
-
-
-def test_audio_features_schema(media):
-    from persistor_spark.analytics import multimodal
-
-    feats = multimodal.extract_audio_features(media)
-    n_audio = media.filter(F.col("media_type") == "audio").count()
-    assert feats.count() == n_audio
-    row = feats.first()
-    assert len(row["mfcc"]) == 8 and row["n_bytes"] > 0
 
 
 def test_bm25_search_ranks_relevant_docs(spark):
@@ -1120,7 +1097,6 @@ def test_quantize_int8_roundtrip_and_plan(embs):
     import numpy as np
 
     from persistor_spark.analytics import similarity
-    from persistor_spark.plans import layout
 
     out = similarity.quantize_int8(embs)
     rows = out.limit(20).collect()
@@ -1133,7 +1109,7 @@ def test_quantize_int8_roundtrip_and_plan(embs):
         recon = np.asarray(r["codes"], dtype=np.float64) * r["scale"]
         assert np.max(np.abs(v - recon)) <= r["scale"] / 2 + 1e-6
     # narrow op: no shuffle in the plan
-    assert not layout.plan_has_shuffle(out)
+    assert not plan_has_shuffle(out)
 
 
 def test_normalized_text_canonicalization(spark):
@@ -1167,10 +1143,9 @@ def test_select_representatives_policy(spark):
 def test_random_projection_matches_numpy_and_is_narrow(embs):
     import numpy as np
 
-    from persistor_spark.plans import layout
 
     out = similarity.random_projection(embs, in_dim=64, out_dim=16, seed=7)
-    assert not layout.plan_has_shuffle(out)
+    assert not plan_has_shuffle(out)
     R = np.asarray(similarity.jl_matrix(64, 16, 7))
     rows = embs.select("vec_id", "embedding").limit(20).collect()
     got = {r["vec_id"]: np.asarray(r["proj"]) for r in out.collect()}
@@ -1529,10 +1504,9 @@ def test_ivfpq_add_appends_without_retraining(spark, embs, tmp_path):
     assert added.cents == idx.cents and added.codebooks == idx.codebooks
     assert added.cells.count() == n_base + newb.count()
     # encode path is a narrow map: no shuffle in the new-cells plan
-    from persistor_spark.plans import layout
 
     enc = similarity.ivfpq_encode_cells(idx.cents, idx.codebooks, newb)
-    assert not layout.plan_has_shuffle(enc)
+    assert not plan_has_shuffle(enc)
 
     # disk append equals the in-memory union
     path = str(tmp_path / "idx")

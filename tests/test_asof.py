@@ -44,19 +44,6 @@ def test_asof_tolerance(spark):
     assert loose["v"] == 5
 
 
-def test_range_join_containment(spark):
-    left = spark.createDataFrame(
-        [(1, "a", _ts(5)), (2, "a", _ts(20)), (3, "b", _ts(5))],
-        "id long, k string, t timestamp",
-    )
-    right = spark.createDataFrame(
-        [("a", _ts(1), _ts(10), "w1"), ("b", _ts(6), _ts(8), "w2")],
-        "k string, s timestamp, e timestamp, w string",
-    )
-    got = {(r["id"], r["w"]) for r in asof.range_join(left, right, "k", "t", "s", "e").collect()}
-    assert got == {(1, "w1")}  # id2 outside range, id3's window starts later
-
-
 def test_asof_tolerance_on_ntz_timestamps(spark):
     # TIMESTAMP_NTZ rejects a direct BIGINT cast — the tolerance branch must
     # go through unix_timestamp (the failure class that broke e9/e20).

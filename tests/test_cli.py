@@ -114,3 +114,28 @@ def test_cli_batch_ingest_pins_one_instant(spark, source_dir, tmp_path, capsys, 
         (F.unix_millis("indexer_ingestion_time") - skew * 1000).alias("ms")
     ).distinct().collect()
     assert [r["ms"] for r in clocks] == [int(instant.timestamp() * 1000)]
+
+
+def test_cli_serve_binds_the_env_address(spark, ingested, tmp_path, capsys, monkeypatch):
+    """With no --port, IDX_API_SERVER_ADDRESS decides where the Indexer API
+    listens (loadServerOptionsFromEnv, server.go:82-108)."""
+    import socket
+    import types
+
+    from persistor_spark.plans import ingest
+
+    idx = str(tmp_path / "index")
+    ingest.write_index(ingested, idx)
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    monkeypatch.setenv("IDX_API_SERVER_ADDRESS", f"127.0.0.1:{port}")
+
+    class _Interrupted:  # Ctrl-C as soon as the servers are up
+        def wait(self):
+            raise KeyboardInterrupt
+
+    monkeypatch.setattr(cli, "threading", types.SimpleNamespace(Event=_Interrupted))
+    rc, emitted = _run_cli(capsys, ["serve", "--index", idx])
+    assert rc == 0
+    assert emitted == {"serving": {"indexer": port}}

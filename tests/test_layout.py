@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from persistor_spark.plans import layout
+from plan_asserts import plan_has_shuffle
 
 
 @pytest.fixture(scope="module")
@@ -27,14 +28,14 @@ def test_bucketed_join_no_shuffle(spark, bucketed_tables, ingested):
     )
     assert joined.count() == plain.count()
     # the scale property: no Exchange in the physical plan
-    assert not layout.plan_has_shuffle(joined.select("location_key"))
+    assert not plan_has_shuffle(joined.select("location_key"))
 
 
 def test_unbucketed_join_has_shuffle_for_contrast(spark, ingested):
     a = ingested.index_metadata.select("location_key")
     b = ingested.blob_records.select("location_key")
     joined = a.join(b, "location_key")
-    assert layout.plan_has_shuffle(joined)
+    assert plan_has_shuffle(joined)
 
 
 def test_write_blobs_one_file_per_mask_dir(spark, tmp_path, ingested):
@@ -86,17 +87,15 @@ def test_point_lookup_pushdown_on_persisted_index(spark, tmp_path, ingested):
 
 
 def test_write_index_bucketed_join_no_shuffle(spark, ingested):
-    """The index-table bucketing convenience: a unique_id join between the
+    """The index table bucketed by unique_id: a unique_id join between the
     bucketed index and a same-bucketed id table runs with NO Exchange."""
-    from persistor_spark.plans import ingest
-
-    ingest.write_index_bucketed(ingested, "idx_by_uid", n_buckets=8, mode="overwrite")
+    layout.write_bucketed(ingested.index_metadata, "idx_by_uid", "unique_id", n_buckets=8)
     ids = ingested.index_metadata.select("unique_id").limit(200)
     layout.write_bucketed(ids, "ids_by_uid", "unique_id", n_buckets=8)
     try:
         joined = layout.bucketed_join(spark, "idx_by_uid", "ids_by_uid", "unique_id")
         assert joined.count() == 200
-        assert not layout.plan_has_shuffle(joined.select("unique_id"))
+        assert not plan_has_shuffle(joined.select("unique_id"))
     finally:
         spark.sql("DROP TABLE IF EXISTS idx_by_uid")
         spark.sql("DROP TABLE IF EXISTS ids_by_uid")

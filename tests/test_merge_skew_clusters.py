@@ -20,23 +20,6 @@ def test_write_index_merge_idempotent(spark, tmp_path, ingested):
     assert spark.read.parquet(path).select("unique_id").distinct().count() == n1
 
 
-def test_salted_count_matches_plain(spark, sf_dir):
-    from persistor_spark import fixtures
-
-    msgs = fixtures.load_messages(spark, sf_dir)
-    plain = {
-        (r["broker_id"],): r["n"]
-        for r in msgs.groupBy("broker_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {
-        (r["broker_id"],): r["n"]
-        for r in skew.salted_count(
-            msgs, ["broker_id"], factor=8, deterministic_col="broker_msg_id"
-        ).collect()
-    }
-    assert plain == salted
-
-
 def test_salted_agg_two_phase(spark, sf_dir):
     from persistor_spark import fixtures
 
@@ -58,14 +41,6 @@ def test_salted_agg_two_phase(spark, sf_dir):
         .collect()
     }
     assert got == want
-
-
-def test_salted_join_matches_plain(spark):
-    big = spark.range(0, 2000).withColumn("k", (F.col("id") % 3).cast("int"))
-    small = spark.createDataFrame([(0, "x"), (1, "y"), (2, "z")], "k int, v string")
-    plain = big.join(small, "k").count()
-    salted = skew.salted_join(big, small, "k", factor=4, deterministic_col="id").count()
-    assert plain == salted == 2000
 
 
 def test_dedup_clusters_transitive(spark):

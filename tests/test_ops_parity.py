@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from persistor_spark import fixtures
-from persistor_spark.config import IngestConfig
 from persistor_spark.functions import sizes
 from persistor_spark.plans.query import extract_interval_params
 from persistor_spark.sources import brokers
@@ -22,14 +21,6 @@ def test_message_size_expression(spark):
     got = [r[0] for r in df.select(sizes.message_size()).collect()]
     # 4 + (2+2) + (3+1) = 12; 0; 2
     assert got == [12, 0, 2]
-
-
-def test_batch_memory_predicate(spark, sf_dir):
-    msgs = fixtures.load_messages(spark, sf_dir)
-    sized = msgs.withColumn("sz", sizes.message_size())
-    cfg = IngestConfig()
-    ok = sized.filter(sizes.batch_memory_ok(F.col("sz"), cfg.batch.batch_memory_bytes))
-    assert ok.count() == msgs.count()  # fixture messages are tiny
 
 
 def test_interval_params_defaults_and_future_rejection():

@@ -3,6 +3,8 @@ DLQ routing of malformed JSON, checkpoint restart idempotence.
 (SURVEY.md §5: file source replaces the broker locally.)"""
 
 import json
+import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,13 +15,21 @@ from persistor_spark.streaming import ingest_stream
 
 @pytest.fixture()
 def chunked_messages(spark, sf_dir, tmp_path):
-    """Fixture messages written as 3 parquet chunks (3 micro-batches)."""
+    """Fixture messages written as 3 non-empty parquet files, one per
+    `event_seq % 3` chunk, so a max_files_per_trigger=1 stream runs 3
+    non-empty micro-batches.  The file source takes files oldest first, so
+    increasing mtimes fix which chunk each batch id gets."""
     msgs = fixtures.load_messages(spark, sf_dir)
-    src = str(tmp_path / "src")
-    msgs.withColumn("__chunk", F.col("event_seq") % 3).repartition(3, "__chunk").drop(
-        "__chunk"
-    ).write.parquet(src)
-    return msgs, src
+    src = tmp_path / "src"
+    stamp = time.time() - 60
+    for i in range(3):
+        before = set(src.glob("*.parquet"))
+        msgs.filter(F.col("event_seq") % 3 == i).coalesce(1).write.mode("append").parquet(
+            str(src)
+        )
+        (written,) = set(src.glob("*.parquet")) - before
+        os.utime(written, (stamp + i, stamp + i))
+    return msgs, str(src)
 
 
 def _sinks(tmp_path, name):

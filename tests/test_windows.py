@@ -32,17 +32,6 @@ def _run_to_memory(spark, df, name):
     return spark.sql(f"SELECT * FROM {name}")
 
 
-def test_tumbling_counts_batch_totals(msgs):
-    out = windows.tumbling_counts(msgs, window="1 hour", watermark="2 hours")
-    total = out.agg(F.sum("n")).collect()[0][0]
-    assert total == msgs.count()
-    # window bounds are aligned hours
-    bad = out.filter(
-        (F.minute("window_start") != 0) | (F.second("window_start") != 0)
-    )
-    assert bad.count() == 0
-
-
 def test_sliding_throughput_overlap(msgs):
     out = windows.sliding_throughput(msgs, window="2 hours", slide="1 hour")
     # each message lands in exactly window/slide = 2 windows
@@ -56,16 +45,6 @@ def test_session_windows_gap(msgs):
     assert out.agg(F.sum("n")).collect()[0][0] == keyed.count()
     # session bounds ordered
     assert out.filter(F.col("session_end") < F.col("session_start")).count() == 0
-
-
-def test_tumbling_counts_streaming_equals_batch(spark, msgs, streamed):
-    stream = ingest_stream.file_stream(spark, streamed, max_files_per_trigger=10)
-    got = _run_to_memory(
-        spark, windows.tumbling_counts(stream, window="1 hour", watermark="2 hours"), "tumble"
-    )
-    want = windows.tumbling_counts(msgs, window="1 hour", watermark="2 hours")
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
 
 
 def test_streaming_first_seen_dedup(spark, tmp_path, sf_dir):
