@@ -6814,9 +6814,10 @@ def _d42_dedup_gate_stream(spark, sf_dir):
     Three micro-batches (maxFilesPerTrigger=1, mtime-pinned): the first
     half of the messages, then the SAME half redelivered with
     ingestion_time +2 min (the broker at-least-once arm,
-    handler_test.go:429-645), then the second half.  Both merge writers
-    are OFF (exactly_once_index/blobs=False), so the gate alone stands
-    between the redelivery and the index sink; the oracle is the batch
+    handler_test.go:429-645), then the second half.  The index merge
+    writer is OFF (exactly_once_index=False), and the blob merge anti-joins
+    only on replays, so the gate alone stands between the redelivery and
+    the index sink; the oracle is the batch
     prologue's index_metadata on the non-location columns — one row per
     key, with the FIRST delivery's timestamps (a leaked duplicate would
     shift ingestion_time by +2 min and break the hash, not just the
@@ -6855,7 +6856,6 @@ def _d42_dedup_gate_stream(spark, sf_dir):
             sinks,
             failure=F.expr(fixtures.DEADLETTER_PRED_SQL),
             exactly_once_index=False,
-            exactly_once_blobs=False,
             dedup_gate=True,
             # wide watermark = the gate's state-retention horizon must
             # cover the fixture's full 30-day event-time span, or batch 3

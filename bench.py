@@ -292,9 +292,10 @@ def bench_stream_ingest(ctx: Ctx):
     """The E1–E6 streaming identity of the engine (the reference IS a
     streaming ingester, persistor.go:96-166): the same ingest derivation
     through Structured Streaming micro-batches — file source standing in for
-    the broker (SURVEY §5), 4 micro-batches, exactly-once merge sinks off
+    the broker (SURVEY §5), 4 micro-batches, the index merge sink off
     (fresh sinks + file source is exactly-once already, matching
-    bench_ingest_persist's append semantics).  Self-timed: source chunking
+    bench_ingest_persist's append semantics; the blob merge appends
+    directly outside replays).  Self-timed: source chunking
     is prep, not ingest.  The line to compare against is ingest_persist —
     same rows, same blob+index writes, plus per-batch scheduling overhead."""
     from persistor_spark.streaming import ingest_stream
@@ -320,7 +321,7 @@ def bench_stream_ingest(ctx: Ctx):
     stream = ingest_stream.file_stream(ctx.spark, src, max_files_per_trigger=1)
     t0 = time.time()
     q, metrics = ingest_stream.run_stream(
-        stream, cfg, sinks, exactly_once_index=False, exactly_once_blobs=False
+        stream, cfg, sinks, exactly_once_index=False
     )
     q.awaitTermination(600)
     elapsed = time.time() - t0

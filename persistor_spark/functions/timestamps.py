@@ -14,7 +14,6 @@ from datetime import datetime, timezone
 from pyspark.sql import Column, functions as F
 
 INDEX_WIRE_FORMAT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-QUERY_WIRE_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
 
 
 def parse_wire(col: Column | str) -> Column:

@@ -10,9 +10,11 @@ the same micro-batch, so we never pay a second serialize/publish/consume.
 Scale shape:
 - version split (T3) = derived columns + `partitionBy` on write — distributed,
   no driver grouping;
-- position assignment = one window shuffle keyed by `location_key`: its
-  cardinality grows with data volume while per-blob row counts stay bounded
-  by the batch size (<=5000, persistor.toml:79), so partitions stay small;
+- position assignment = one window per sink over that sink's ONE shuffle,
+  keyed by the blob directory, which the blob write reuses: its
+  cardinality grows with data volume while per-blob row counts stay
+  bounded by the batch size (<=5000, persistor.toml:79), so partitions
+  stay small;
 - everything else is narrow projections inside whole-stage codegen;
 - dead-letter routing (K6) is a filter split, not a second pass.
 """
@@ -24,13 +26,14 @@ from dataclasses import dataclass, replace
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F, types as T
 
 from persistor_spark.config import IngestConfig
 from persistor_spark.functions import keys
 from persistor_spark.operators import blob_naming
 from persistor_spark.operators.version_batching import version_column
 from persistor_spark.plans import fsutil
+from persistor_spark.schemas import BLOB_RECORD_SCHEMA, INDEX_METADATA_SCHEMA
 
 # Dead-letter reason attributes (sender.go:46-76; category strings from
 # persistor.go:43-46 and indexer.go:41-44).
@@ -80,6 +83,9 @@ class IngestResult:
     deadletter: DataFrame
     mask_column_names: list
     _intermediate: DataFrame | None = None
+    # The micro-batch whose blob names these location_keys carry (streaming
+    # only); write_blobs_merge dispatches on it.
+    batch_id: int | None = None
 
     def unpersist(self) -> None:
         if self._intermediate is not None:
@@ -203,39 +209,59 @@ def run_batch(
     # records and the index; D9's position-align join checks the round
     # trip.  unique_id is not a key (a redelivered id may carry another
     # payload), so payload hash then payload break ties: without a total
-    # order, two uncached evaluations of the window (one per sink) could
-    # number tied rows differently and the index would point at the wrong
-    # payload.  With unique ids the extra keys change no value.  The
-    # index's `location_position` and the blob records' `position` are the
-    # SAME row_number — record_id IS unique_id — so one window, before the
-    # sink fork, serves both (r14 opt, guide §2.1).  The blob-size count
-    # shares the (partition, order) spec with an unbounded frame, so Spark
-    # evaluates both in ONE Window node over ONE sort.  With
-    # persist_intermediate the cached prefix holds the window output and
-    # the second sink skips the shuffle+sort.
+    # order, two evaluations of the window (one per sink) could number tied
+    # rows differently and the index would point at the wrong payload.
+    # With unique ids the extra keys change no value.  The index's
+    # `location_position` and the blob records' `position` are the SAME
+    # row_number — record_id IS unique_id.  The blob-size count shares the
+    # (partition, order) spec with an unbounded frame, so Spark evaluates
+    # both in ONE Window node over ONE sort.
+    #
+    # Each sink shuffles its rows once: a hash partitioning on the blob's
+    # directory (location_key up to its file name), which the window,
+    # partitioned by (directory, location_key), reuses.  Every mask
+    # directory lands in one task, so the blob write needs no shuffle of
+    # its own (_append_blobs).  The key is a function of location_key, not
+    # the mask columns: partitionBy escapes a '/' inside a mask value and
+    # location_key does not, so two mask tuples can share one location_key
+    # and a window over the mask columns would number one blob twice.  The
+    # partition counts differ per sink: the blob write opens one file per
+    # directory, a cost that scales with the directory count, not bytes, so
+    # it takes one partition per core; the index writes one file per
+    # partition, so AQE coalesces its count by bytes (a per-core count
+    # would write one index file per core per batch).  With
+    # persist_intermediate both sinks read ONE cached window output, in the
+    # blob side's partitioning, instead of each re-deriving it (used by
+    # bench + foreachBatch's failure split).
     from pyspark.sql import Window as _W
 
-    _w = _W.partitionBy("location_key").orderBy(
+    blob_dir = F.regexp_extract("location_key", r"^(.*)/blob-", 1)
+    _w = _W.partitionBy(blob_dir, "location_key").orderBy(
         "unique_id", F.xxhash64("payload"), "payload"
     )
-    live = live.withColumns(
-        {
-            "__pos": F.row_number().over(_w).cast("int"),
-            "__blob_n": F.count(F.lit(1)).over(
-                _w.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
-            ),
-        }
-    )
-    # blob and index projections fork here; caching the shared prefix stops
-    # each sink's action from re-deriving it (used by bench + foreachBatch)
+
+    def positioned(rows: DataFrame) -> DataFrame:
+        return rows.withColumns(
+            {
+                "__pos": F.row_number().over(_w).cast("int"),
+                "__blob_n": F.count(F.lit(1)).over(
+                    _w.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
+                ),
+            }
+        )
+
+    n_write = live.sparkSession.sparkContext.defaultParallelism
+    blob_side = positioned(live.repartition(n_write, blob_dir))
     if persist_intermediate:
-        live = live.persist()
+        blob_side = index_side = blob_side.persist()
+    else:
+        index_side = positioned(live.repartition(blob_dir))
 
     # Index projection (T5/T6 enrichment + T10 finalize).
     idx_clock = F.expr(f"{clock} + INTERVAL {cfg.indexer_clock_skew_s} SECOND")
     # single-record blobs carry a NULL index position and skip
     # deserialization (resubmitter.go:176-182) — an index-side convention
-    index_metadata = live.withColumn(
+    index_metadata = index_side.withColumn(
         "location_position", F.when(F.col("__blob_n") > 1, F.col("__pos"))
     ).select(
         "broker_id",
@@ -256,7 +282,7 @@ def run_batch(
 
     # Blob projection (K3 record shape: persistor_record.go:23-33); blob
     # files number EVERY record, so position is the bare fused row_number.
-    blob_records = live.select(
+    blob_records = blob_side.select(
         "location_key",
         F.col("__pos").alias("position"),
         F.col("unique_id").alias("record_id"),
@@ -270,7 +296,7 @@ def run_batch(
         index_metadata,
         deadletter,
         mask_names,
-        _intermediate=live if persist_intermediate else None,
+        _intermediate=blob_side if persist_intermediate else None,
     )
 
 
@@ -306,9 +332,20 @@ def _merge_append(new: DataFrame, path: str, read_existing, on: list, append) ->
         except AnalysisException as exc:
             if not _no_table_yet(exc):
                 raise
+    return _observed_append(new, append)
+
+
+def _observed_append(new: DataFrame, append) -> int:
+    """`append(new)` with its row count riding the write as an observation."""
     obs = Observation()
     append(new.observe(obs, F.count(F.lit(1)).alias("n")))
     return observed_count(obs)
+
+
+def _key_schema(schema: T.StructType, on: list) -> T.StructType:
+    """The `on` fields of a table schema: an existing-side read given it
+    projects the keys without a schema-inference job per batch."""
+    return T.StructType([schema[c] for c in on])
 
 
 def write_index_merge(result: IngestResult, path: str, lock_path: str | None = None) -> int:
@@ -337,12 +374,13 @@ def write_index_merge(result: IngestResult, path: str, lock_path: str | None = N
     parquet analogue, local-FS scope like the broker stand-ins.
     """
     spark = result.index_metadata.sparkSession
+    on = ["unique_id"]
     with _writer_lock(lock_path):
         return _merge_append(
             result.index_metadata,
             path,
-            lambda: spark.read.parquet(path),
-            ["unique_id"],
+            lambda: spark.read.schema(_key_schema(INDEX_METADATA_SCHEMA, on)).parquet(path),
+            on,
             lambda new: new.write.mode("append").parquet(path),
         )
 
@@ -374,24 +412,12 @@ def resolve_blob_format(spark, fmt: str) -> str:
 def _append_blobs(records: DataFrame, mask_names: list, path: str, fmt: str) -> None:
     """The one mask-partitioned blob append behind both blob writers.
 
-    Repartition on the mask columns first: upstream, rows arrive
-    partitioned by location_key (the position window, AQE-coalesced) or
-    hash-distributed on the merge anti-join's key, so every write task
-    would otherwise open a file in EVERY mask directory — task-count x
-    dir-count small files and serial encode per task.  With mask
-    partitioning each directory is written by one task.  The explicit
-    partition count keeps AQE from coalescing the write down to a handful
-    of tasks (parquet encode is CPU-bound; fewer tasks just serialize it)
-    — hash partitioning still maps each directory to exactly one task, so
-    the files-per-directory guarantee holds."""
-    n_write = records.sparkSession.sparkContext.defaultParallelism
-    (
-        records.repartition(n_write, *mask_names)
-        .write.mode("append")
-        .partitionBy(*mask_names)
-        .format(fmt)
-        .save(path)
-    )
+    Rows must arrive with every mask directory inside one task, or every
+    write task opens a file in every directory it sees (task-count x
+    dir-count small files).  run_batch's blob-directory exchange gives that
+    to a steady-state write; write_blobs_merge's replay path repartitions
+    after its anti-join."""
+    records.write.mode("append").partitionBy(*mask_names).format(fmt).save(path)
 
 
 def write_blobs(result: IngestResult, path: str, fmt: str = "avro") -> None:
@@ -413,27 +439,55 @@ def write_blobs(result: IngestResult, path: str, fmt: str = "avro") -> None:
     _append_blobs(result.blob_records, result.mask_column_names, path, fmt)
 
 
-def write_blobs_merge(result: IngestResult, path: str, fmt: str = "avro") -> int:
-    """Exactly-once blob append: anti-join the batch's records on
-    (location_key, record_id) against what's already persisted, append only
-    the new rows.  Returns the number of rows appended.
+# The blob table's attempt watermark: the highest micro-batch id whose blob
+# write has started on it.  The leading '_' hides it from table reads.
+ATTEMPTED_BATCH_FILE = "_attempted_batch"
 
-    This is the blob-side twin of write_index_merge — a checkpoint replay
-    (batch failed AFTER the blob write but before the index write, or an
-    at-least-once source redelivered) finds its rows present and appends
-    nothing, so the E1 exactly-once-table guarantee covers blobs too.
-    Scale: the existing side projects only the two join-key columns
-    (column-pruned scan) and the join hash-distributes on location_key;
-    on Delta/Iceberg this is MERGE WHEN NOT MATCHED.
+
+def write_blobs_merge(result: IngestResult, path: str, fmt: str = "avro") -> int:
+    """Exactly-once blob append.  Returns the number of rows appended.
+
+    Dispatch rule.  A micro-batch (`result.batch_id` set) whose id is above
+    the table's attempt watermark appends directly, after raising the
+    watermark: its location_keys carry its batch id, so only an earlier
+    attempt of the SAME batch id can have written them, and no attempt
+    started.  Everything else anti-joins on (location_key, record_id)
+    against the persisted rows and appends only the missing ones: a
+    checkpoint replay, batch 0 re-planned after heal_virgin_checkpoint, a
+    fresh checkpoint pointed at an old table, and every write without a
+    batch id.  The watermark is written (tmp + rename) BEFORE the blob
+    write starts, so a crash anywhere inside the write leaves the batch at
+    or below it.  Cross-batch redeliveries get new location_keys, which
+    no blob anti-join can catch; the index's unique_id anti-join does.
+
+    The replay path's existing side projects only the two key columns (a
+    column-pruned scan, schema given); after the anti-join the rows are
+    hash-distributed on its keys, so they are repartitioned on the mask
+    columns before the append.  The explicit count keeps AQE from
+    coalescing that write to a handful of serial encode tasks.  On
+    Delta/Iceberg the replay path is MERGE WHEN NOT MATCHED.
     """
     spark = result.blob_records.sparkSession
     fmt = resolve_blob_format(spark, fmt)
+    mask_names = result.mask_column_names
+
+    def append(rows: DataFrame) -> None:
+        _append_blobs(rows, mask_names, path, fmt)
+
+    if result.batch_id is not None:
+        mark = f"{path}/{ATTEMPTED_BATCH_FILE}"
+        attempted = fsutil.try_read_text(spark, mark)
+        if attempted is None or result.batch_id > int(attempted):
+            fsutil.write_text(spark, mark, str(result.batch_id))
+            return _observed_append(result.blob_records, append)
+    on = ["location_key", "record_id"]
+    n_write = spark.sparkContext.defaultParallelism
     return _merge_append(
         result.blob_records,
         path,
-        lambda: spark.read.format(fmt).load(path),
-        ["location_key", "record_id"],
-        lambda new: _append_blobs(new, result.mask_column_names, path, fmt),
+        lambda: spark.read.schema(_key_schema(BLOB_RECORD_SCHEMA, on)).format(fmt).load(path),
+        on,
+        lambda new: append(new.repartition(n_write, *mask_names)),
     )
 
 

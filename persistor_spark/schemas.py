@@ -65,18 +65,6 @@ BLOB_RECORD_SCHEMA = T.StructType(
     ]
 )
 
-# Dead-letter output: original message + 3 reason attributes (sender.go:46-76).
-DEADLETTER_SCHEMA = T.StructType(
-    [
-        T.StructField("unique_id", T.StringType(), False),
-        T.StructField("payload", T.StringType(), True),
-        T.StructField("attributes", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("dead_letter_error_category", T.StringType(), False),
-        T.StructField("dead_letter_error_reason", T.StringType(), False),
-        T.StructField("dead_letter_source", T.StringType(), False),
-    ]
-)
-
 # Business keys promoted out of the attribute map into index columns and
 # REMOVED from additional_metadata (sender.go:136-160).
 PROMOTED_ATTRIBUTE_KEYS = (

@@ -20,11 +20,13 @@ Semantics mapping (reference -> Spark):
   micro-batch finish.
 
 Scale: foreachBatch writes are partitioned by the mask columns (partition
-pruning for readers); the shuffles per micro-batch are the bounded
-location_key position window (plans.ingest.run_batch), the blob write's mask
-repartition and the merge writers' anti-joins.  Checkpointing bounds replay;
-a Delta MERGE on unique_id upgrades the index to exactly-once on clusters
-that carry Delta.
+pruning for readers).  In a steady-state micro-batch each sink shuffles its
+rows once: run_batch's exchange on the blob directory, which the
+location_key position window and the blob write reuse.  The index sink adds
+its unique_id anti-join.  A replayed batch adds the blob anti-join on (location_key,
+record_id) and the mask repartition after it (plans.ingest.write_blobs_merge
+states the dispatch rule).  Checkpointing bounds replay; a Delta MERGE on
+unique_id upgrades the index to exactly-once on clusters that carry Delta.
 """
 
 from __future__ import annotations
@@ -167,7 +169,6 @@ def run_stream(
     trigger_available_now: bool = True,
     processing_time: str | None = None,
     exactly_once_index: bool = True,
-    exactly_once_blobs: bool = True,
     fault_injector=None,
     dedup_gate: bool = False,
     dedup_gate_watermark: str = "2 hours",
@@ -199,16 +200,19 @@ def run_stream(
     location_keys and indexer_ingestion_time.  A configured clock column
     is used as is.
 
-    Exactly-once (E1): both sinks default to the anti-join MERGE writers
-    (write_blobs_merge on (location_key, record_id), write_index_merge on
-    unique_id).  A batch that fails between or during the two writes — or
-    a source redelivery — re-runs with the SAME batch_id and clock,
-    derives the SAME location_keys, finds its rows present, and appends
-    nothing.  The one batch a re-run can re-plan under a new clock is
-    batch 0 (after heal_virgin_checkpoint wipes a commit-less checkpoint);
-    its sinks run blobs first, see the sink-order rule in handle_batch.
-    Set the flags False only for fire-and-forget bulk loads where the
-    source is exactly-once end to end.
+    Exactly-once (E1): blobs always go through write_blobs_merge, which
+    anti-joins on (location_key, record_id) only when the batch id is at
+    or below the blob table's attempt watermark, i.e. on a replay; the
+    index defaults to write_index_merge's unique_id anti-join.  A batch
+    that fails between or during the two writes re-runs with the SAME
+    batch_id and clock, derives the SAME location_keys, finds its rows
+    present, and appends nothing; a source redelivery in a later batch is
+    caught by the index anti-join.  The one batch a re-run can re-plan
+    under a new clock is batch 0 (after heal_virgin_checkpoint wipes a
+    commit-less checkpoint); its sinks run blobs first, see the sink-order
+    rule in handle_batch.  Set `exactly_once_index=False` only for
+    fire-and-forget bulk loads where the source is exactly-once end to
+    end.
 
     `failure` mirrors run_batch's injection hook (rows -> DLQ);
     `fault_injector(batch_id)` is called between the blob and index writes
@@ -276,10 +280,8 @@ def run_stream(
                 # replayed batch overwrites its own blobs with the same
                 # bytes.
                 ingest.write_blobs(result, sinks.blob_path, fmt="ocf")
-            elif exactly_once_blobs:
-                ingest.write_blobs_merge(result, sinks.blob_path, fmt=sinks.blob_format)
             else:
-                ingest.write_blobs(result, sinks.blob_path, fmt=sinks.blob_format)
+                ingest.write_blobs_merge(result, sinks.blob_path, fmt=sinks.blob_format)
 
         from dataclasses import replace as _dc_replace
 
@@ -291,6 +293,7 @@ def run_stream(
             index_metadata=result.index_metadata.observe(
                 idx_obs, F.count(F.lit(1)).alias("n")
             ),
+            batch_id=batch_id,
         )
 
         def do_index() -> None:

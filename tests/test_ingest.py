@@ -53,6 +53,37 @@ def test_positions_dense_per_blob(ingested):
     assert stats.count() == 0
 
 
+def test_positions_per_location_key_when_mask_value_has_slash(spark, sf_dir):
+    """A '/' inside an attribute mask value is escaped in the mask directory
+    but not in location_key, so ('x/y', 'z') and ('x', 'y/z') share one
+    location_key.  Positions stay one dense numbering per location_key,
+    ordered by unique_id, across both mask tuples."""
+    cfg = IngestConfig(
+        storage=StorageConfig(mask=("{a}", "{b}")),
+        clock_column="ingestion_time",
+    )
+    msgs = (
+        fixtures.load_messages(spark, sf_dir)
+        .limit(8)
+        .withColumn("broker_id", F.lit("b0"))
+        .withColumn(
+            "attributes",
+            F.when(F.col("event_seq") % 2 == 0, F.create_map(*map(F.lit, ["a", "x/y", "b", "z"])))
+            .otherwise(F.create_map(*map(F.lit, ["a", "x", "b", "y/z"]))),
+        )
+    )
+    res = ingest.run_batch(msgs, cfg)
+    rows = res.blob_records.select(
+        "location_key", "position", "record_id", "__mask_a", "__mask_b"
+    ).collect()
+    assert len({r["location_key"] for r in rows}) == 1
+    assert len({(r["__mask_a"], r["__mask_b"]) for r in rows}) == 2
+    want = {rid: i for i, rid in enumerate(sorted(r["record_id"] for r in rows), 1)}
+    assert {r["record_id"]: r["position"] for r in rows} == want
+    idx = res.index_metadata.select("unique_id", "location_position").collect()
+    assert {r["unique_id"]: r["location_position"] for r in idx} == want
+
+
 def test_null_position_iff_singleton_blob(ingested):
     """Index position is NULL exactly for single-record blobs
     (convertSingle shortcut, resubmitter.go:176-182)."""

@@ -1,13 +1,15 @@
-"""Every top-level function and class in the package must be reached from
-production code: the package itself, the driver registry
+"""Every top-level function, class and module constant in the package must
+be reached from production code: the package itself, the driver registry
 (`__spark_entry__.py`) or `bench.py`.
 
 Reach is transitive.  The roots are the names in `__spark_entry__.py`,
-`bench.py` and the module-level code of the package (imports excluded: an
-import alone uses nothing); a definition is reached when a root or the text
-of a reached definition names it.  A definition that only tests name, or
-that only other such definitions name, fails, unless ALLOWED lists it with
-the reason it stays:
+`bench.py` and the module-level code of the package (imports and
+definitions excluded: an import alone uses nothing); a definition is
+reached when a root or the text of a reached definition names it.  A module
+constant is a top-level assignment to plain names (dunder names such as
+`__all__` stay module-level code); its definition text is the assignment.
+A definition that only tests name, or that only other such definitions
+name, fails, unless ALLOWED lists it with the reason it stays:
 
 - ("COVERAGE", label): it backs the COVERAGE.md row whose first cell starts
   with `label`, and that row names it or its module;
@@ -64,6 +66,28 @@ def _py_files(root):
                 yield os.path.join(dirpath, name)
 
 
+def _defined_names(node):
+    """The names a top-level statement defines: a function or class, or the
+    plain-name targets of a constant assignment (dunders excluded)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, ast.Tuple) else [t]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    if any(n.startswith("__") and n.endswith("__") for n in names):
+        return []
+    return names
+
+
 def _scan():
     """(defs, roots): defs maps each top-level package name to the words of
     its definitions (decorators included, its own name dropped); roots are
@@ -77,11 +101,12 @@ def _scan():
         for node in ast.parse(text, filename=path).body:
             first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
             span = range(first, node.end_lineno + 1)
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = _defined_names(node)
+            if names:
                 words = set(_WORD.findall("\n".join(lines[first - 1 : node.end_lineno])))
-                words.discard(node.name)
                 loc = f"{os.path.relpath(path, REPO)}:{node.lineno}"
-                defs.setdefault(node.name, []).append((loc, words))
+                for name in names:
+                    defs.setdefault(name, []).append((loc, words - {name}))
                 skip.update(span)
             elif isinstance(node, (ast.Import, ast.ImportFrom)):
                 skip.update(span)

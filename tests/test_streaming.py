@@ -344,6 +344,86 @@ def test_wallclock_midbatch_crash_replay_is_exactly_once(
     _assert_batch_clocks(idx, cfg.indexer_clock_skew_s, _logged_batch_timestamps(sinks))
 
 
+def test_crash_after_later_batch_blob_write_replays_exactly_once(
+    spark, tmp_path, chunked_messages
+):
+    """A crash between the blob and index writes of a batch after batch 0:
+    the attempt watermark already holds that batch id, so the replay takes
+    the blob anti-join instead of appending its rows a second time."""
+    from persistor_spark.plans import ingest
+
+    _, src = chunked_messages
+    cfg = fixtures.fixture_ingest_config()
+    sinks = _sinks(tmp_path, "out_wm")
+    mark = os.path.join(sinks.blob_path, ingest.ATTEMPTED_BATCH_FILE)
+    crashed = {}
+
+    def crash_once(batch_id):
+        if batch_id > 0 and not crashed:
+            with open(mark) as fh:
+                crashed[batch_id] = int(fh.read())
+            raise RuntimeError("injected: crashed between blob and index write")
+
+    total = ingest_stream.run_stream_supervised(
+        lambda: ingest_stream.file_stream(spark, src, max_files_per_trigger=1),
+        cfg,
+        sinks,
+        fault_injector=crash_once,
+    )
+    assert total.batches >= 3
+    ((batch_id, watermark),) = crashed.items()
+    assert watermark == batch_id
+
+    idx = spark.read.parquet(sinks.index_path)
+    blobs = spark.read.parquet(sinks.blob_path)
+    assert (
+        blobs.groupBy("location_key", "record_id").count().filter("count > 1").count() == 0
+    )
+    assert blobs.count() == idx.count()
+
+
+def test_steady_state_blob_write_is_one_file_per_mask_directory(
+    spark, tmp_path, chunked_messages
+):
+    """Steady-state micro-batches append blobs without reading the blob
+    table, and write exactly one file per (mask directory, batch).  A stray
+    file in the table root would fail any read or partition discovery of
+    the table, so the stream completing shows the blob writes read none."""
+    _, src = chunked_messages
+    cfg = fixtures.fixture_ingest_config()
+    sinks = _sinks(tmp_path, "out_steady")
+    os.makedirs(sinks.blob_path)
+    stray = os.path.join(sinks.blob_path, "stray.parquet")
+    with open(stray, "wb") as fh:
+        fh.write(b"not a parquet file")
+    q, metrics = ingest_stream.run_stream(
+        ingest_stream.file_stream(spark, src, max_files_per_trigger=1), cfg, sinks
+    )
+    assert q.awaitTermination(300)
+    assert metrics.batches >= 3
+    os.remove(stray)
+
+    files = [
+        os.path.join(d, f)
+        for d, _, names in os.walk(sinks.blob_path)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    dirs_per_batch = (
+        spark.read.parquet(sinks.blob_path)
+        .select(
+            F.regexp_extract("location_key", r"-b(\d+)\.", 1),
+            "__mask_year",
+            "__mask_month",
+            "__mask_day",
+            "__mask_attr_version",
+        )
+        .distinct()
+        .count()
+    )
+    assert len(files) == dirs_per_batch
+
+
 def test_kafka_source_options_mapping():
     cfg = fixtures.fixture_ingest_config()
     opts = ingest_stream.kafka_source_options(cfg, "broker:9092", "events")
@@ -464,8 +544,8 @@ def test_decode_kafka_record_shape(spark):
 def test_dedup_gate_drops_redeliveries(spark, sf_dir, tmp_path):
     """run_stream(dedup_gate=True): at-least-once redeliveries (same
     broker_id+broker_msg_id, later ingestion_time) are dropped by the fused
-    stateful gate even with the merge writers OFF — the index and blobs see
-    each key exactly once, and the kept row is the FIRST delivery."""
+    stateful gate even with the index merge writer OFF — the index and blobs
+    see each key exactly once, and the kept row is the FIRST delivery."""
     msgs = fixtures.load_messages(spark, sf_dir).filter(F.col("event_seq") < 200)
     src = str(tmp_path / "dupsrc")
     first = msgs
@@ -481,7 +561,6 @@ def test_dedup_gate_drops_redeliveries(spark, sf_dir, tmp_path):
         cfg,
         sinks,
         exactly_once_index=False,
-        exactly_once_blobs=False,
         dedup_gate=True,
         # wider than the fixture's event-time span: file arrival order is
         # arbitrary, and a narrow watermark would drop later-arriving older
@@ -524,7 +603,6 @@ def test_dedup_gate_state_survives_restart(spark, sf_dir, tmp_path):
             cfg,
             sinks,
             exactly_once_index=False,
-            exactly_once_blobs=False,
             dedup_gate=True,
         )
 
