@@ -26,6 +26,10 @@ from persistor_spark.config import StorageConfig, TIME_MASK_MEMBERS
 from persistor_spark.functions.sqlq import sql_ident, sql_str
 from persistor_spark.operators.version_batching import UNKNOWN
 
+# Every blob's file name starts with this: location_key is
+# `<blob directory>/blob-<name>.<ext>` (blob_column_exprs, blob_directory).
+_FILE_PREFIX = "blob-"
+
 # Mask time parts as SQL templates over the clock expression string: the
 # ingest plan builds these per batch — per MICRO-batch on the streaming path
 # — and one F.expr parse per member replaces a chain of Column calls, each a
@@ -97,10 +101,18 @@ def blob_column_exprs(
     static_parts = [sql_str(f"{cfg.base_url}/{cfg.prefix}/")]
     for n in cols:
         static_parts.extend([sql_ident(n), sql_str("/")])
-    static_parts.append(sql_str("blob-"))
+    static_parts.append(sql_str(_FILE_PREFIX))
     lk = F.concat(
         F.expr(f"concat({', '.join(static_parts)})"),
         name_col,
         F.lit(f".{cfg.extension}"),
     )
     return cols, lk
+
+
+def blob_directory(location_key: Column) -> Column:
+    """The directory part of a location_key built by blob_column_exprs:
+    everything before its last `/blob-` (base URL, prefix, mask parts).
+    A function of location_key alone, so two mask tuples that share one
+    location_key (a '/' inside a mask value) share one directory too."""
+    return F.regexp_extract(location_key, f"^(.*)/{_FILE_PREFIX}", 1)

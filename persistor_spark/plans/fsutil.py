@@ -26,11 +26,14 @@ the reference targets GCS/Azure blob storage — storage.go):
   completes.
 - The local scheme goes through Hadoop's checksummed LocalFileSystem, so
   sibling `.crc` files are created/renamed/removed consistently with
-  their data files.
+  their data files.  The one exception is the small text files
+  (write_text/read_text): on a local path they use Python's file API,
+  see write_text.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 # Every table these helpers list is parquet.
@@ -164,7 +167,24 @@ def total_size(spark, path: str) -> int:
 
 def write_text(spark, path: str, text: str) -> None:
     """Write a small text file with last-writer-wins visibility: create a
-    sibling `.tmp` (overwrite), hflush/close, then rename over `path`."""
+    sibling `.tmp` (overwrite), flush/close, then rename over `path`.
+
+    A local path uses Python's file API (os.replace is an atomic
+    rename-over) and removes any sibling `.crc` a Hadoop write left, so a
+    later Hadoop read verifies nothing stale.  The Hadoop route costs
+    about 20 Py4J round trips, tens of ms while executors saturate the
+    host, and the streaming blob sink writes its attempt watermark this
+    way on every micro-batch."""
+    local = _local_path(path)
+    if local is not None:
+        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
+        with open(local + ".tmp", "w", encoding="utf-8") as fh:
+            fh.write(text)
+        os.replace(local + ".tmp", local)
+        head, name = os.path.split(local)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(head, f".{name}.crc"))
+        return
     fs = fs_for(spark, path)
     tmp = path + ".tmp"
     out = fs.create(jpath(spark, tmp), True)
@@ -215,7 +235,12 @@ def try_read_text(spark, path: str) -> str | None:
 
 
 def read_text(spark, path: str) -> str:
-    """Read a small text file fully into a string."""
+    """Read a small text file fully into a string (a local path through
+    Python's file API, like write_text)."""
+    local = _local_path(path)
+    if local is not None:
+        with open(local, encoding="utf-8") as fh:
+            return fh.read()
     jvm = spark._jvm
     fs = fs_for(spark, path)
     stream = fs.open(jpath(spark, path))

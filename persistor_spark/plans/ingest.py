@@ -10,11 +10,11 @@ the same micro-batch, so we never pay a second serialize/publish/consume.
 Scale shape:
 - version split (T3) = derived columns + `partitionBy` on write — distributed,
   no driver grouping;
-- position assignment = one window per sink over that sink's ONE shuffle,
-  keyed by the blob directory, which the blob write reuses: its
-  cardinality grows with data volume while per-blob row counts stay
-  bounded by the batch size (<=5000, persistor.toml:79), so partitions
-  stay small;
+- position assignment = one window per sink over that sink's ONE shuffle
+  (the index's keyed by location_key, the blob write's by blob directory):
+  the key cardinality grows with data volume while per-blob row counts
+  stay bounded by the batch size (<=5000, persistor.toml:79), so
+  partitions stay small;
 - everything else is narrow projections inside whole-stage codegen;
 - dead-letter routing (K6) is a filter split, not a second pass.
 """
@@ -217,45 +217,45 @@ def run_batch(
     # (partition, order) spec with an unbounded frame, so Spark evaluates
     # both in ONE Window node over ONE sort.
     #
-    # Each sink shuffles its rows once: a hash partitioning on the blob's
-    # directory (location_key up to its file name), which the window,
-    # partitioned by (directory, location_key), reuses.  Every mask
-    # directory lands in one task, so the blob write needs no shuffle of
-    # its own (_append_blobs).  The key is a function of location_key, not
-    # the mask columns: partitionBy escapes a '/' inside a mask value and
-    # location_key does not, so two mask tuples can share one location_key
-    # and a window over the mask columns would number one blob twice.  The
-    # partition counts differ per sink: the blob write opens one file per
-    # directory, a cost that scales with the directory count, not bytes, so
-    # it takes one partition per core; the index writes one file per
-    # partition, so AQE coalesces its count by bytes (a per-core count
-    # would write one index file per core per batch).  With
-    # persist_intermediate both sinks read ONE cached window output, in the
-    # blob side's partitioning, instead of each re-deriving it (used by
-    # bench + foreachBatch's failure split).
+    # The sinks want different partitionings, so each gets its own window
+    # over its own ONE exchange.  The index writes one file per partition:
+    # its window keeps the location_key exchange, whose count AQE coalesces
+    # by bytes.  The blob write opens one file per mask directory in each
+    # task holding its rows, a cost that scales with directories, not
+    # bytes: its rows are hash-partitioned on the blob directory, one
+    # partition per core, and its window, partitioned by (directory,
+    # location_key), reuses that exchange, so every directory lands in one
+    # task and the write needs no shuffle of its own (_append_blobs).  The
+    # directory is a function of
+    # location_key, never of the mask columns: partitionBy escapes a '/'
+    # inside a mask value and location_key does not, so two mask tuples can
+    # share one location_key, and a window over the mask columns would
+    # number one blob twice.  With persist_intermediate both sinks read ONE
+    # cached index-side window output (used by bench + foreachBatch's
+    # failure split), and the blob side repartitions it on the directory.
     from pyspark.sql import Window as _W
 
-    blob_dir = F.regexp_extract("location_key", r"^(.*)/blob-", 1)
-    _w = _W.partitionBy(blob_dir, "location_key").orderBy(
-        "unique_id", F.xxhash64("payload"), "payload"
-    )
+    blob_dir = blob_naming.blob_directory(F.col("location_key"))
+    order = ("unique_id", F.xxhash64("payload"), "payload")
 
-    def positioned(rows: DataFrame) -> DataFrame:
+    def positioned(rows: DataFrame, *partition: Column | str) -> DataFrame:
+        w = _W.partitionBy(*partition).orderBy(*order)
         return rows.withColumns(
             {
-                "__pos": F.row_number().over(_w).cast("int"),
+                "__pos": F.row_number().over(w).cast("int"),
                 "__blob_n": F.count(F.lit(1)).over(
-                    _w.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
+                    w.rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
                 ),
             }
         )
 
     n_write = live.sparkSession.sparkContext.defaultParallelism
-    blob_side = positioned(live.repartition(n_write, blob_dir))
+    index_side = positioned(live, "location_key")
     if persist_intermediate:
-        blob_side = index_side = blob_side.persist()
+        index_side = index_side.persist()
+        blob_side = index_side.repartition(n_write, blob_dir)
     else:
-        index_side = positioned(live.repartition(blob_dir))
+        blob_side = positioned(live.repartition(n_write, blob_dir), blob_dir, "location_key")
 
     # Index projection (T5/T6 enrichment + T10 finalize).
     idx_clock = F.expr(f"{clock} + INTERVAL {cfg.indexer_clock_skew_s} SECOND")
@@ -296,7 +296,7 @@ def run_batch(
         index_metadata,
         deadletter,
         mask_names,
-        _intermediate=blob_side if persist_intermediate else None,
+        _intermediate=index_side if persist_intermediate else None,
     )
 
 
@@ -448,16 +448,18 @@ def write_blobs_merge(result: IngestResult, path: str, fmt: str = "avro") -> int
     """Exactly-once blob append.  Returns the number of rows appended.
 
     Dispatch rule.  A micro-batch (`result.batch_id` set) whose id is above
-    the table's attempt watermark appends directly, after raising the
-    watermark: its location_keys carry its batch id, so only an earlier
-    attempt of the SAME batch id can have written them, and no attempt
-    started.  Everything else anti-joins on (location_key, record_id)
-    against the persisted rows and appends only the missing ones: a
-    checkpoint replay, batch 0 re-planned after heal_virgin_checkpoint, a
-    fresh checkpoint pointed at an old table, and every write without a
-    batch id.  The watermark is written (tmp + rename) BEFORE the blob
-    write starts, so a crash anywhere inside the write leaves the batch at
-    or below it.  Cross-batch redeliveries get new location_keys, which
+    the table's attempt watermark, or that finds no table at all, appends
+    directly, after raising the watermark: its location_keys carry its
+    batch id, so only an earlier attempt of the SAME batch id can have
+    written them, and no attempt started.  Everything else anti-joins on
+    (location_key, record_id) against the persisted rows and appends only
+    the missing ones: a checkpoint replay, batch 0 re-planned after
+    heal_virgin_checkpoint, a fresh checkpoint pointed at an old table, a
+    table that exists without a watermark (written before watermarks, or
+    copied without its hidden files; the batch writes one first), and
+    every write without a batch id.  The watermark is written (tmp +
+    rename) BEFORE the blob write starts, so a crash anywhere inside the
+    write leaves the batch at or below it.  Cross-batch redeliveries get new location_keys, which
     no blob anti-join can catch; the index's unique_id anti-join does.
 
     The replay path's existing side projects only the two key columns (a
@@ -477,8 +479,13 @@ def write_blobs_merge(result: IngestResult, path: str, fmt: str = "avro") -> int
     if result.batch_id is not None:
         mark = f"{path}/{ATTEMPTED_BATCH_FILE}"
         attempted = fsutil.try_read_text(spark, mark)
-        if attempted is None or result.batch_id > int(attempted):
+        if attempted is None:
+            direct = not fsutil.exists(spark, path)
+        else:
+            direct = result.batch_id > int(attempted)
+        if attempted is None or direct:
             fsutil.write_text(spark, mark, str(result.batch_id))
+        if direct:
             return _observed_append(result.blob_records, append)
     on = ["location_key", "record_id"]
     n_write = spark.sparkContext.defaultParallelism

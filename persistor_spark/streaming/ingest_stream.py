@@ -21,11 +21,12 @@ Semantics mapping (reference -> Spark):
 
 Scale: foreachBatch writes are partitioned by the mask columns (partition
 pruning for readers).  In a steady-state micro-batch each sink shuffles its
-rows once: run_batch's exchange on the blob directory, which the
-location_key position window and the blob write reuse.  The index sink adds
-its unique_id anti-join.  A replayed batch adds the blob anti-join on (location_key,
-record_id) and the mask repartition after it (plans.ingest.write_blobs_merge
-states the dispatch rule).  Checkpointing bounds replay; a Delta MERGE on
+rows once for its position window (plans.ingest.run_batch): the blob sink on
+the blob directory, an exchange its write reuses, the index sink on
+location_key.  The index sink adds its unique_id anti-join.  A replayed
+batch adds the blob anti-join on (location_key, record_id) and the mask
+repartition after it (plans.ingest.write_blobs_merge states the dispatch
+rule).  Checkpointing bounds replay; a Delta MERGE on
 unique_id upgrades the index to exactly-once on clusters that carry Delta.
 """
 

@@ -1,7 +1,8 @@
 """plans.fsutil: the Hadoop-FileSystem-routed file ops that make
 maintenance (compact/delete/recover) URI-agnostic.  Local paths exercise
 the same code path as gs://abfss://s3a:// (scheme resolution via
-Path.getFileSystem) — only the connector differs at deploy."""
+Path.getFileSystem) — only the connector differs at deploy — except the
+small-text read/write, which takes Python's file API on a local path."""
 
 import pytest
 
@@ -17,6 +18,12 @@ def test_write_read_text_roundtrip_and_overwrite(spark, tmp_path):
     assert fsutil.read_text(spark, p) == '{"a": 2}'
     # no .tmp residue from the atomic-write dance
     assert fsutil.glob(spark, f"{p}.tmp") == []
+    # a checksum a Hadoop write left is dropped with the local rewrite, so
+    # a Hadoop read of the new content verifies nothing stale
+    crc = tmp_path / ".j.json.crc"
+    crc.write_bytes(b"stale")
+    fsutil.write_text(spark, p, '{"a": 3}')
+    assert not crc.exists()
 
 
 def test_exists_delete_glob(spark, tmp_path):

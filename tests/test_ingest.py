@@ -115,6 +115,43 @@ def test_location_key_mask_structure(ingested):
     assert bad.count() == 0
 
 
+def test_blob_directory_is_location_key_dirname(ingested):
+    """blob_directory (run_batch's blob-side exchange key) is location_key
+    without its file name, never empty: if the blob layout drifted from
+    it, every row would hash into one write task."""
+    from persistor_spark.operators import blob_naming
+
+    lk = F.col("location_key")
+    bad = ingested.index_metadata.filter(
+        (blob_naming.blob_directory(lk) != F.regexp_replace(lk, "/[^/]+$", ""))
+        | (blob_naming.blob_directory(lk) == "")
+    )
+    assert bad.count() == 0
+
+
+def test_blob_merge_without_watermark_on_existing_table_dedups(spark, sf_dir, tmp_path):
+    """A blob table that exists without an attempt watermark (written before
+    watermarks, or copied without hidden files) gets the anti-join: a batch
+    whose rows are already there appends nothing and leaves a watermark.  A
+    batch that finds no table appends directly."""
+    from dataclasses import replace
+
+    cfg = IngestConfig(clock_column="ingestion_time")
+    msgs = fixtures.load_messages(spark, sf_dir).limit(40)
+    res = replace(ingest.run_batch(msgs, cfg), batch_id=3)
+    path = str(tmp_path / "blobs")
+    ingest.write_blobs(res, path, fmt="parquet")
+    assert ingest.write_blobs_merge(res, path, fmt="parquet") == 0
+    blobs = spark.read.parquet(path)
+    assert blobs.count() == 40
+    assert blobs.groupBy("location_key", "record_id").count().filter("count > 1").count() == 0
+    with open(tmp_path / "blobs" / ingest.ATTEMPTED_BATCH_FILE) as fh:
+        assert fh.read() == "3"
+
+    fresh = str(tmp_path / "fresh")
+    assert ingest.write_blobs_merge(replace(res, batch_id=0), fresh, fmt="parquet") == 40
+
+
 def test_deadletter_reason_attributes(ingested):
     """DLQ rows carry the 3 reason attributes with reference category strings
     (sender.go:46-76, persistor.go:43-46)."""

@@ -388,11 +388,18 @@ def test_steady_state_blob_write_is_one_file_per_mask_directory(
     """Steady-state micro-batches append blobs without reading the blob
     table, and write exactly one file per (mask directory, batch).  A stray
     file in the table root would fail any read or partition discovery of
-    the table, so the stream completing shows the blob writes read none."""
+    the table, so the stream completing shows the blob writes read none.
+    The table starts with an attempt watermark below every batch id: an
+    existing table without one is deduplicated on every batch's first
+    write."""
+    from persistor_spark.plans import ingest
+
     _, src = chunked_messages
     cfg = fixtures.fixture_ingest_config()
     sinks = _sinks(tmp_path, "out_steady")
     os.makedirs(sinks.blob_path)
+    with open(os.path.join(sinks.blob_path, ingest.ATTEMPTED_BATCH_FILE), "w") as fh:
+        fh.write("-1")
     stray = os.path.join(sinks.blob_path, "stray.parquet")
     with open(stray, "wb") as fh:
         fh.write(b"not a parquet file")
